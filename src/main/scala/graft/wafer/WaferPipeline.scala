@@ -1,10 +1,14 @@
 package graft.wafer
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.IOUtils
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Num
 import graft.operators.IqrOutlierFilter
@@ -25,9 +29,14 @@ import graft.operators.IqrOutlierFilter
   *
   * Scale: stages compose lazily into one Catalyst plan; callers should
   * cache() the post-outlier frame when running the full pipeline (the
-  * one reused intermediate). The only driver-side materializations are
-  * the per-group quantile bounds (tiny) and the fitted K-Means models,
-  * exactly the two forced action points SURVEY.md §3 identifies.
+  * one reused intermediate). The eager work inside the stages is:
+  *   - the outlier stage's per-group quantile bounds (tiny collects);
+  *   - runKMeansByStep: the row-id frame (`withId`) cached for the call,
+  *     one per-step moments aggregate, the fit (one z-vector collect for
+  *     the driver-local steps, cached MLlib fits past the limit, each
+  *     label frame `localCheckpoint`ed) and a `localCheckpoint` of the
+  *     labelled result, after which `withId` is released;
+  *   - summary and writeCsv, which are actions by definition.
   */
 object WaferPipeline {
 
@@ -115,10 +124,10 @@ object WaferPipeline {
     * ties break to the lower cluster index, and an emptied cluster
     * keeps its previous center (standard Lloyd's). ≤ 20 iterations or
     * assignment fixpoint, matching the MLlib defaults it replaces.
+    * Returns (row id, cluster) pairs in row-id order.
     */
   private def localKMeansLabels(
-      spark: SparkSession, rows: Array[(Long, Array[Double])],
-      k: Int, seed: Long): DataFrame = {
+      rows: Array[(Long, Array[Double])], k: Int, seed: Long): Array[(Long, Int)] = {
     val sorted = rows.sortBy(_._1)
     val n = sorted.length
     val dim = sorted(0)._2.length
@@ -179,9 +188,7 @@ object WaferPipeline {
       }
       iter += 1
     }
-    import spark.implicits._
-    sorted.indices.map(i => (sorted(i)._1, assign(i)))
-      .toDF("__row_id", "KMeans_Cluster")
+    sorted.indices.map(i => (sorted(i)._1, assign(i))).toArray
   }
 
   /** G1-G4: per-step K-Means over z-scored features, labels joined back
@@ -199,9 +206,15 @@ object WaferPipeline {
     *   - per-step subsets at or under
     *     `spark.graft.wafer.kmeansLocalLimit` (default 500k rows; 0
     *     disables) fit via a driver-side seeded Lloyd's over the
-    *     collected z-vectors ([[localKMeansLabels]]) — see the dispatch
-    *     comment in the body; the distributed MLlib path is the shape
-    *     past the limit.
+    *     collected z-vectors ([[localKMeansLabels]]); the distributed
+    *     MLlib path is the shape past the limit.
+    *
+    * Job structure: one grouped aggregate yields every step's row count
+    * and moments, and the count picks the fit, so there is no probe job.
+    * All driver-local steps share one z-vector collect and are fitted
+    * in a plain loop; the local path's job count does not grow with the
+    * number of steps. Each MLlib step is its own cached fit. One left
+    * join by row id plus a `localCheckpoint` writes the labels back.
     */
   def runKMeansByStep(
       df: DataFrame,
@@ -213,111 +226,110 @@ object WaferPipeline {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val spark = df.sparkSession
+    import spark.implicits._
+    // the local Lloyd's seeds its init by row id, so the ids must come
+    // from this frame's own partitioning; cached because the moments,
+    // the fits and the write-back all read it
     val withId = df.withColumn("__row_id", monotonically_increasing_id()).cache()
-    withId.count() // materialize once before the per-step jobs race for it
-    def fitStep(step: String): Option[DataFrame] = {
-      val subset = withId
-        .filter(col("IS_DEFECT") === "REAL" && col("Step_desc") === step)
-        .na.drop("any", features)
-      val aggs = features.flatMap(f => Seq(
+    val subset = withId
+      .filter(col("IS_DEFECT") === "REAL" && col("Step_desc").isin(steps: _*))
+      .na.drop("any", features)
+    // per step: row count, then (mean, mean of squares) per feature
+    val moments: Map[String, Row] = subset.groupBy("Step_desc")
+      .agg(count(lit(1)).as("__n"), features.flatMap(f => Seq(
         (Num.dsum(col(f)) / count(col(f))).as(s"__m_$f"),
-        (Num.dsum(col(f) * col(f)) / count(col(f))).as(s"__msq_$f")))
-      val zCols = features.map { f =>
-        val m = col(s"__m_$f")
-        val sd = sqrt(col(s"__msq_$f") - col(s"__m_$f") * col(s"__m_$f"))
-        ((col(f) - m) / when(sd === 0.0 || sd.isNull, lit(1.0)).otherwise(sd)).as(s"__z_$f")
+        (Num.dsum(col(f) * col(f)) / count(col(f))).as(s"__msq_$f"))): _*)
+      .collect().map(r => r.getString(0) -> r).toMap
+    // z-vectors of the given steps; each step's moments enter as
+    // literals, through the same expressions the aggregate's columns
+    // would, so the z-scores do not depend on how they are fetched
+    def scaled(fitSteps: Seq[String]): DataFrame = {
+      val zCols = features.zipWithIndex.map { case (f, j) =>
+        fitSteps.map { step =>
+          val m = lit(moments(step).getDouble(2 + 2 * j))
+          val sd = sqrt(lit(moments(step).getDouble(3 + 2 * j)) - m * m)
+          step -> (col(f) - m) / when(sd === 0.0 || sd.isNull, lit(1.0)).otherwise(sd)
+        }.foldLeft(lit(null).cast("double")) { case (acc, (step, z)) =>
+          when(col("Step_desc") === step, z).otherwise(acc)
+        }.as(s"__z_$f")
       }
-      val scaled = subset.crossJoin(broadcast(subset.agg(aggs.head, aggs.tail: _*)))
-        .select((col("__row_id") +: zCols): _*)
-      val localLimit = spark.conf
-        .get("spark.graft.wafer.kmeansLocalLimit", "500000").toLong
-      // Small-subset dispatch (the cc.localLimit discipline, applied
-      // to the fit): an MLlib fit on a per-step subset this size is
-      // ~20 scheduled jobs whose wall is task-launch floors and
-      // whose scheduling noise was the widest band in every driver
-      // bench — while the same Lloyd's iterations over the collected
-      // z-vectors (≤ 500k × 8 doubles ≈ 36 MB) are milliseconds of
-      // driver compute, deterministic and partition-invariant by
-      // construction (rows iterated in row-id order, seeded
-      // hash-ranked init). Cluster ids are arbitrary under BOTH
-      // paths (correctness is structural, §5.3). Past the limit the
-      // distributed MLlib path below runs unchanged — the 100 TB
-      // shape, where per-step subsets are billions of rows.
-      // The probe IS the fetch (componentsDispatch discipline): one
-      // limit-pushed collect both sizes the subset and, when it fits,
-      // delivers the fit input — no separate count job, and the
-      // dispatch path never materializes a cache it reads only once.
-      val probe =
-        if (localLimit > 0 && localLimit < Int.MaxValue - 1)
-          Some(scaled.limit(localLimit.toInt + 1).collect())
-        else None
-      probe match {
-        case Some(rows) if rows.isEmpty => None
-        case Some(rows) if rows.length <= localLimit =>
-          val vecs = rows.map(r => (r.getLong(0),
-            Array.tabulate(features.size)(j => r.getDouble(j + 1))))
-          Some(localKMeansLabels(spark, vecs, k, seed))
-        case _ =>
-          // cache the z-scored vectors: the fit is iterative and would
-          // otherwise re-evaluate the whole upstream plan once per pass
-          val cached = scaled.cache()
-          try {
-            val cnt = cached.count()
-            if (cnt == 0) None
-            else {
-              val fitInput = cached
-                .withColumn("__fv",
-                  array_to_vector(array(features.map(f => col(s"__z_$f")): _*)))
-                // one partition per ~500k rows (floor 1): each iteration is
-                // a handful of tasks, large subsets keep their parallelism
-                .coalesce(math.max(1L, math.min(
-                  cached.rdd.getNumPartitions.toLong, cnt / 500000L + 1)).toInt)
-                .cache()
-              try {
-                // random init (seed-pinned): k-means||'s multi-round
-                // distributed seeding is pure scheduling overhead at these
-                // subset sizes, and cluster ids are permutation-arbitrary
-                // either way (correctness is structural, §5.3)
-                val model = new KMeans()
-                  .setK(k).setSeed(seed).setInitMode("random")
-                  .setFeaturesCol("__fv").setPredictionCol("__cluster")
-                  .fit(fitInput)
-                val labels = model.transform(fitInput).select(col("__row_id"),
-                  col("__cluster").cast(IntegerType).as("KMeans_Cluster"))
-                  .localCheckpoint() // materialize so fit input can be freed
-                Some(labels)
-              } finally fitInput.unpersist()
-            }
-          } finally cached.unpersist()
-      }
+      subset.filter(col("Step_desc").isin(fitSteps: _*))
+        .select((col("__row_id") +: col("Step_desc") +: zCols): _*)
     }
-    // Steps are independent → fit them concurrently by default: each
-    // fit is a latency-bound chain of jobs, so overlapping the three
+    val localLimit = spark.conf
+      .get("spark.graft.wafer.kmeansLocalLimit", "500000").toLong
+    // Small-subset dispatch (the cc.localLimit discipline, applied
+    // to the fit): an MLlib fit on a per-step subset this size is
+    // ~20 scheduled jobs whose wall is task-launch floors and
+    // whose scheduling noise was the widest band in every driver
+    // bench — while the same Lloyd's iterations over the collected
+    // z-vectors (≤ 500k × 18 doubles per step) are milliseconds of
+    // driver compute, deterministic and partition-invariant by
+    // construction (rows iterated in row-id order, seeded
+    // hash-ranked init). Cluster ids are arbitrary under BOTH
+    // paths (correctness is structural, §5.3). Past the limit the
+    // distributed MLlib path below runs unchanged — the 100 TB
+    // shape, where per-step subsets are billions of rows.
+    val (localSteps, mllibSteps) = steps.distinct.filter(moments.contains)
+      .partition(step => localLimit > 0 && moments(step).getLong(1) <= localLimit)
+    val localLabels =
+      if (localSteps.isEmpty) Nil
+      else {
+        val byStep = scaled(localSteps).collect().groupBy(_.getString(1))
+        localSteps.flatMap { step =>
+          localKMeansLabels(byStep(step).map(r =>
+            (r.getLong(0), Array.tabulate(features.size)(j => r.getDouble(j + 2)))), k, seed)
+        }
+      }
+    def fitMllib(step: String): DataFrame = {
+      val z = scaled(Seq(step))
+      val cnt = moments(step).getLong(1)
+      // cache the z-scored vectors: the fit is iterative and would
+      // otherwise re-evaluate the upstream plan once per pass
+      val fitInput = z
+        .withColumn("__fv", array_to_vector(array(features.map(f => col(s"__z_$f")): _*)))
+        // one partition per ~500k rows (floor 1): each iteration is
+        // a handful of tasks, large subsets keep their parallelism
+        .coalesce(math.max(1L, math.min(z.rdd.getNumPartitions.toLong, cnt / 500000L + 1)).toInt)
+        .cache()
+      try {
+        // random init (seed-pinned): k-means||'s multi-round
+        // distributed seeding is pure scheduling overhead at these
+        // subset sizes, and cluster ids are permutation-arbitrary
+        // either way (correctness is structural, §5.3)
+        val model = new KMeans()
+          .setK(k).setSeed(seed).setInitMode("random")
+          .setFeaturesCol("__fv").setPredictionCol("__cluster")
+          .fit(fitInput)
+        model.transform(fitInput).select(col("__row_id"),
+          col("__cluster").cast(IntegerType).as("KMeans_Cluster"))
+          .localCheckpoint() // materialize so fit input can be freed
+      } finally fitInput.unpersist()
+    }
+    // MLlib steps are independent → fit them concurrently by default:
+    // each fit is a latency-bound chain of jobs, so overlapping the
     // chains is genuine throughput (same-box A/B, r13: sequential
     // wafer median 5.38 s vs concurrent 2.66 s).
     // `spark.graft.wafer.concurrentFits=false` pins them sequential
     // for measurement experiments; results are identical either way
     // (fits are per-step independent).
-    val concurrent = df.sparkSession.conf
+    val concurrent = spark.conf
       .get("spark.graft.wafer.concurrentFits", "true").toBoolean
-    val labelParts =
+    val mllibLabels =
       if (concurrent)
-        Await.result(
-          Future.sequence(steps.map(step => Future(fitStep(step)))),
-          Duration.Inf).flatten
-      else steps.flatMap(fitStep)
+        Await.result(Future.sequence(mllibSteps.map(step => Future(fitMllib(step)))),
+          Duration.Inf)
+      else mllibSteps.map(fitMllib)
+    val labelParts =
+      (if (localLabels.isEmpty) Nil else Seq(localLabels.toDF("__row_id", "KMeans_Cluster"))) ++
+        mllibLabels
     val out =
       if (labelParts.isEmpty)
         withId.withColumn("KMeans_Cluster", lit(null).cast(IntegerType))
-      else {
-        val labels = labelParts.reduce(_ unionByName _)
-        withId.join(labels, Seq("__row_id"), "left")
-      }
+      else withId.join(labelParts.reduce(_ unionByName _), Seq("__row_id"), "left")
     // materialize, then free the withId cache: the returned lazy plan
     // references it, so without this every pipeline run in a session
-    // leaks a cached copy of the full input (the operator already
-    // forces actions internally — fits, counts — so eagerness here
-    // changes nothing observable)
+    // leaks a cached copy of the full input
     val result = out.drop("__row_id").localCheckpoint()
     withId.unpersist()
     result
@@ -370,36 +382,94 @@ object WaferPipeline {
       clusterDist: Map[Option[Int], Long],
       killerCount: Long)
 
+  /** One grouped aggregate — rows and null cells per (Class, IS_DEFECT,
+    * plus KMeans_Cluster and is_killer_defect when present) — folded on
+    * the driver. The groups are few (classes × defect flags × clusters),
+    * so the fold is cheap, and `classes` is sorted in Spark's binary
+    * string order, as an `orderBy("Class")` would return it.
+    */
   def summary(df: DataFrame): Summary = {
     val cols = df.columns
-    val nullCountCols = cols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)))
-      .reduce(_ + _).as("nulls")
-    val base = df.agg(
-      count(lit(1)).as("rows"),
-      nullCountCols,
-      count(when(col("IS_DEFECT") === "REAL", 1)).as("real"),
-      count(when(col("IS_DEFECT") === "FALSE", 1)).as("false")).head()
-    val classes = df.filter(col("Class").isNotNull)
-      .select("Class").distinct().orderBy("Class")
-      .collect().map(_.getString(0)).toSeq
+    val keys = Seq("Class", "IS_DEFECT") ++
+      Seq("KMeans_Cluster", "is_killer_defect").filter(cols.contains)
+    val nullsInRow = cols.map(c => when(col(c).isNull, 1L).otherwise(0L)).reduce(_ + _)
+    val groups = df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)), sum(nullsInRow))
+      .collect()
+    val n = keys.size
+    def rowsWhere(p: Row => Boolean): Long = groups.filter(p).map(_.getLong(n)).sum
+    val classes = groups.filter(!_.isNullAt(0)).map(_.getString(0)).distinct
+      .sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+      .toSeq
     val clusterDist =
-      if (cols.contains("KMeans_Cluster"))
-        df.groupBy("KMeans_Cluster").count().collect()
-          .map(r => (if (r.isNullAt(0)) None else Some(r.getInt(0))) -> r.getLong(1))
-          .toMap
-      else Map.empty[Option[Int], Long]
+      if (cols.contains("KMeans_Cluster")) {
+        val i = keys.indexOf("KMeans_Cluster")
+        groups.groupMapReduce(r => if (r.isNullAt(i)) None else Some(r.getInt(i)))(
+          _.getLong(n))(_ + _)
+      } else Map.empty[Option[Int], Long]
     val killer =
-      if (cols.contains("is_killer_defect"))
-        df.filter(col("is_killer_defect")).count()
-      else 0L
-    Summary(base.getLong(0), base.getLong(1), base.getLong(2), base.getLong(3),
+      if (cols.contains("is_killer_defect")) {
+        val i = keys.indexOf("is_killer_defect")
+        rowsWhere(r => !r.isNullAt(i) && r.getBoolean(i))
+      } else 0L
+    Summary(rowsWhere(_ => true), groups.map(_.getLong(n + 1)).sum,
+      rowsWhere(r => r.getString(1) == "REAL"), rowsWhere(r => r.getString(1) == "FALSE"),
       classes, clusterDist, killer)
   }
 
-  /** A5: CSV export. coalesce(1) mirrors the reference's single-file
+  /** A5: CSV export as one file, mirroring the reference's single-file
     * output for operator hand-off — only sane for small exports; at
     * scale callers write partitioned parquet instead.
+    *
+    * Job structure: one parallel write job, a part per input partition,
+    * into a hidden staging directory beside `path`; the driver then
+    * replaces `path` with one `part-00000-…csv` that concatenates the
+    * parts in partition order and keeps the first header only, so the
+    * file has the bytes a `coalesce(1)` write of the same frame
+    * produces without one task formatting every row. The frame is fully
+    * written before `path` is touched, so a frame that reads `path`
+    * still works and a failed write leaves `path` as it was; the staging
+    * directory is removed either way.
     */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
+  def writeCsv(df: DataFrame, path: String): Unit = {
+    val fs = new Path(path).getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+    val out = fs.makeQualified(new Path(path))
+    val staging = new Path(out.getParent, s".${out.getName}.staging-${java.util.UUID.randomUUID}")
+    try {
+      df.write.option("header", "true").csv(staging.toString)
+      // Spark writes the header at the head of every part file (and a
+      // header-only part 0 for an empty frame); strip all but one
+      val header = {
+        val w = new java.io.StringWriter
+        val gen = new UnivocityGenerator(df.schema, w,
+          new CSVOptions(Map("header" -> "true"), true,
+            df.sparkSession.sessionState.conf.sessionLocalTimeZone))
+        gen.writeHeaders()
+        gen.flush()
+        w.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      }
+      val parts = fs.listStatus(staging).map(_.getPath)
+        .filter(p => p.getName.startsWith("part-"))
+        .sortBy(p => (p.getName.drop(5).takeWhile(_.isDigit).toInt, p.getName))
+      val merged = new Path(staging, "_merged")
+      val dst = fs.create(merged, false)
+      try {
+        dst.write(header)
+        parts.foreach { p =>
+          val in = fs.open(p)
+          try {
+            val head = new Array[Byte](header.length)
+            in.readFully(head)
+            require(java.util.Arrays.equals(head, header), s"unexpected CSV header in $p")
+            IOUtils.copyBytes(in, dst, 1 << 16, false)
+          } finally in.close()
+        }
+      } finally dst.close()
+      fs.delete(out, true)
+      fs.mkdirs(out)
+      if (!fs.rename(merged, new Path(out, parts.head.getName)))
+        throw new java.io.IOException(s"could not move $merged into $out")
+      fs.create(new Path(out, "_SUCCESS"), false).close()
+    } finally fs.delete(staging, true)
+  }
 }
