@@ -16,14 +16,7 @@ object Verify {
     val only = args.lift(2).map(_.split(',').toSeq)
     only.foreach(p =>
       System.err.println(s"[verify] PARTIAL dump (dev filter): ${p.mkString(",")}"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("WARN")
     run(spark, sfDir, outDir, only)
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -59,16 +60,22 @@ case class BloomMightContain(
 object BloomMightContain {
   private val ctr = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Column probing `bfB` membership of `hash` (a LONG column). The
-    * expression is routed through a uniquely-named session temp
-    * function (the registry is how graft expressions reach the Column
-    * API — graft_cosine discipline; the unique name keeps concurrent
-    * query builds from rebinding each other's filter).
+  /** Column probing `bfB` membership of `hash` (a LONG column), and
+    * the release that drops its temp function. The expression is routed
+    * through a uniquely-named session temp function (the registry is how
+    * graft expressions reach the Column API — graft_cosine discipline;
+    * the unique name keeps concurrent query builds from rebinding each
+    * other's filter). Call the release after the last action on a plan
+    * built from the column; without it the registry keeps one entry per
+    * call.
     */
-  def column(spark: SparkSession, bfB: Broadcast[BloomFilter], hash: Column): Column = {
+  def column(spark: SparkSession, bfB: Broadcast[BloomFilter], hash: Column)
+      : (Column, () => Unit) = {
     val name = s"graft_might_contain_${ctr.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    val registry = spark.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction(
       name, exprs => BloomMightContain(bfB, exprs.head), "built-in")
-    call_function(name, hash)
+    (call_function(name, hash),
+      () => { registry.dropFunction(FunctionIdentifier(name)); () })
   }
 }

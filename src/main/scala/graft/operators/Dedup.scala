@@ -33,6 +33,13 @@ object Dedup {
     */
   val defaultCcLocalLimit: Long = 500000L
 
+  /** Cap on the phase-1 peel/contract passes of
+    * [[connectedComponentsStarCounted]]. A pure chain shrinks ~×0.7 per
+    * pass, so 64 passes drain a chain of ~10¹⁰ nodes; whatever is left
+    * at the cap goes to the star loop.
+    */
+  private val PeelPasses = 64
+
   /** Driver-side union-find (path compression) over a collected pair
     * list, relabeled to the component MINIMUM — bit-identical to the
     * distributed variants' min-id labeling. Returns (node, cluster_id).
@@ -482,9 +489,9 @@ object Dedup {
       * Each removal parks a pointer (node → smaller neighbor); pointers
       * strictly decrease in node value, so the pending forest is
       * acyclic and the post-loop pointer jumping resolves it.
-      * Returns (newActive, removedCount).
+      * Returns (newActive, anyRemoved); `e` itself when nothing peels.
       */
-    def peelContract(e: DataFrame): (DataFrame, Long) = {
+    def peelContract(e: DataFrame): (DataFrame, Boolean) = {
       val hv = max(struct(xxhash64(col("v")), col("v"))).as("__hmax")
       val stats = e.groupBy("u").agg(
         count(lit(1)).as("__d"), min("v").as("__nmin"),
@@ -496,8 +503,7 @@ object Dedup {
               struct(xxhash64(col("u")), col("u")) > col("__hmax")))
           .select(col("u").as("node"), col("__nmin").as("parent"),
             col("__d").as("__dd"), col("__nmax")))
-      val removed = removable.limit(1).count()
-      if (removed == 0L) return (e, 0L)
+      if (removable.limit(1).count() == 0L) return (e, false)
       pending = pending.union(removable.select("node", "parent"))
       val b0 = removable.filter(col("__dd") === 2)
         .select(col("parent").as("u"), col("__nmax").as("v"))
@@ -509,7 +515,7 @@ object Dedup {
           .join(ids, col("u") === col("__l"), "left_anti")
           .join(ids, col("v") === col("__l"), "left_anti")
           .distinct())
-      (nxt, removed)
+      (nxt, true)
     }
 
     // PHASE 1 (round 14): peel/contract to exhaustion BEFORE any star
@@ -520,13 +526,12 @@ object Dedup {
     // pendant fringes without ever paying that blow-up. Every pass is
     // node-sized aggregation + edge-keyed anti-joins over a shrinking
     // set; an unproductive pass exits (a dense core is star work).
-    val peelCap = spark.conf.get("spark.graft.cc.peelPasses", "64").toInt
     var n = active.limit(1).count()
     var peels = 0
     var productive = n > 0
-    while (productive && peels < peelCap) {
-      val (nxt, removed) = peelContract(active)
-      if (removed == 0L) productive = false
+    while (productive && peels < PeelPasses) {
+      val (nxt, anyRemoved) = peelContract(active)
+      if (!anyRemoved) productive = false
       else {
         active = nxt
         n = active.count()
@@ -545,8 +550,7 @@ object Dedup {
     while (n > 0 && iter < maxIter) {
       val next = graft.Iterate.ckpt(
         star(star(active, large = true), large = false))
-      val (nxt, removed) = peelContract(next)
-      active = if (removed == 0L) next else nxt
+      active = peelContract(next)._1
       n = active.count()
       sizes += n
       iter += 1

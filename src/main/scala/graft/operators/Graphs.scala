@@ -148,11 +148,13 @@ object Graphs {
     n
   }
 
-  /** A closing-join pre-filter predicate plus its broadcast-release
-    * handle: callers invoke `release()` after the terminal action so
-    * each query execution frees its filter instead of leaving it to
-    * the GC-driven ContextCleaner (a bench rep would otherwise leak up
-    * to ~115 MB per execution at the 10⁸-edge gate).
+  /** A closing-join pre-filter predicate plus its release handle:
+    * callers invoke `release()` after the terminal action so each query
+    * execution frees its filter instead of leaving it to the GC-driven
+    * ContextCleaner (a bench rep would otherwise leak up to ~115 MB per
+    * execution at the 10⁸-edge gate), and drops the probe's temp
+    * function, so a long-lived session's function registry does not
+    * grow with each build.
     */
   final case class BloomPred(pred: org.apache.spark.sql.Column,
       release: () => Unit)
@@ -181,9 +183,9 @@ object Graphs {
       // ScalaUDF in the wedge join's condition — boxing + the UDF
       // bridge on the query's hottest stream; BloomMightContain is the
       // same probe as a codegen'd Catalyst expression
-      BloomPred(
-        graft.functions.BloomMightContain.column(s, bfB, xxhash64(pu, pv)),
-        () => { bfB.destroy(); () })
+      val (probe, dropProbe) =
+        graft.functions.BloomMightContain.column(s, bfB, xxhash64(pu, pv))
+      BloomPred(probe, () => { dropProbe(); bfB.destroy(); () })
     } else BloomPred(lit(true), () => ())
   }
 

@@ -31,19 +31,21 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructT
   * side is scanned once per column pass; callers with expensive upstream
   * plans should cache the input. The exact strategy is SIZE-DISPATCHED
   * three ways on one count probe: driver bounds replay under
-  * `spark.graft.iqr.localLimit` (1M), the value-buffering `percentile`
+  * `spark.graft.iqr.localLimit` (100k), the value-buffering `percentile`
   * aggregate up to `spark.graft.iqr.bufferedBoundsLimit` (50M), and
   * ORDER STATISTICS over a scalable rank past it ([[sortedBounds]]:
   * range-exchange sort + keyed aggs, bounded task memory at any group
   * size — EXACT quantiles remain available at 100 TB, value buffering
-  * never OOMs an executor). All three are bit-identical by
+  * never OOMs an executor). The two limits are the only levers: with
+  * the probe opted out (localLimit <= 0) there is no count, and the
+  * buffered aggregate runs. All three are bit-identical by
   * construction and A/B-spec'd. `exact=false` swaps to
   * `approx_percentile` (t-digest, single pass, mergeable) when a
   * bounded accuracy cost buys a one-pass plan.
   *
   * Small-input dispatch (the cc.localLimit discipline applied to the
   * bounds computation): when the exact-quantile input fits under
-  * `spark.graft.iqr.localLimit` rows (default 1M; 0 or Int.MaxValue-ish
+  * `spark.graft.iqr.localLimit` rows (default 100k; 0 or Int.MaxValue-ish
   * disables), a column-pruned count sizes the input and a plain collect
   * of the projected (groupCols, valueCols-as-double) columns fetches
   * the data (count-then-fetch — see the probe comment for why a
@@ -56,7 +58,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructT
   * one conjunctive filter with the literal bounds. The distributed path
   * is N eager agg jobs, each re-executing the scan plus the prior pass
   * chain — pure job-launch floors at these sizes, while the driver
-  * replay over ≤1M collected rows is milliseconds. Past the limit the
+  * replay over ≤100k collected rows is milliseconds. Past the limit the
   * probe falls through to the unchanged per-pass distributed plan (the
   * probe itself is then just the count scan; sequential-filter
   * algebra note: with FIXED per-pass bounds, applying the passes as one
@@ -138,19 +140,11 @@ object IqrOutlierFilter {
     // all-one-group input stays comfortably under executor heap) the
     // bounds come from order statistics over a scalable rank
     // ([[sortedBounds]]): bounded task memory at ANY group size, the
-    // exact form's 100 TB shape. `spark.graft.iqr.sortBounds`
-    // true/false forces a strategy (the A/B spec's lever); default
-    // "auto" dispatches on the probe count, and falls back to the
-    // buffered aggregate when no count is known (dispatch opt-out).
-    val conf = df.sparkSession.conf
-    val useSort = exact && (conf.get("spark.graft.iqr.sortBounds", "auto") match {
-      case "true"  => true
-      case "false" => false
-      case _ =>
-        val bufferedLimit =
-          conf.get("spark.graft.iqr.bufferedBoundsLimit", "50000000").toLong
-        bufferedLimit > 0 && knownCount.exists(_ > bufferedLimit)
-    })
+    // exact form's 100 TB shape. Without a probe count (dispatch opted
+    // out) the buffered aggregate runs.
+    val bufferedLimit = df.sparkSession.conf
+      .get("spark.graft.iqr.bufferedBoundsLimit", "50000000").toLong
+    val useSort = exact && bufferedLimit > 0 && knownCount.exists(_ > bufferedLimit)
     var cur = start
     for (c <- valueCols) {
       // The per-group bounds are <= #groups rows: collect them eagerly and

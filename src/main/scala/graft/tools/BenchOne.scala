@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev timer for a single declared query, matching Bench's measurement
   * (noop-write materialization, warm-then-time). Not part of the driver
   * contract; run via
@@ -15,19 +13,14 @@ object BenchOne {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val confs = args.drop(3).flatMap(_.split("=", 2) match {
-      case Array(k, v) => Some(k -> v)
-      case _ => None
-    })
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // a malformed override stops the run: timing the default tier
+    // under the override's label would be a wrong receipt
+    val (confs, bad) = graft.GraftSession.parseOverrides(args.drop(3).toSeq)
+    if (bad.nonEmpty) {
+      System.err.println(s"[benchone] bad conf token(s): ${bad.map(t => s"'$t'").mkString(" ")}")
+      sys.exit(2)
+    }
+    val spark = graft.GraftSession.local()
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
 
     val q = graft.SparkEntry.queries(name)

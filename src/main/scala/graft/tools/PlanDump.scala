@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: writes `.explain("formatted")` for declared queries to
@@ -21,15 +20,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 
     args.drop(2).foreach { spec =>
@@ -41,17 +32,11 @@ object PlanDump {
         case -1 => (namePart, namePart)
         case i  => (namePart.take(i), namePart.drop(i + 1))
       }
-      // guarded parse (ADVICE r13): a malformed token without '=' used
-      // to throw a MatchError outside the per-spec try, aborting every
-      // remaining dump — now it reports the bad token and skips it
-      val overrides = confPart.split(',').filter(_.nonEmpty).flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ =>
-            println(s"[plandump] bad conf token '$kv' in spec '$spec' — skipped")
-            None
-        }
-      }.toSeq
+      // a malformed token is reported and skipped; the other dumps run
+      val (overrides, bad) = graft.GraftSession.parseOverrides(
+        confPart.split(',').filter(_.nonEmpty).toSeq)
+      bad.foreach(kv =>
+        println(s"[plandump] bad conf token '$kv' in spec '$spec' — skipped"))
       val saved = overrides.map { case (k, _) =>
         k -> scala.util.Try(spark.conf.get(k)).toOption
       }

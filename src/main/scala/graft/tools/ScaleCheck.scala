@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical scale-up check: build a key-consistent N× copy of the
@@ -20,15 +20,7 @@ object ScaleCheck {
     // optional comma-separated name-prefix filter (dev loop: re-measure
     // just the queries being worked on)
     val only = args.lift(2).map(_.split(',').toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     // content-fingerprinted key (graft.Stage.key): the q386 incident
     // proved the harness regenerates the parquet in place between
@@ -769,7 +761,8 @@ object ScaleCheck {
     // pipeline, not datagen.
     if (only.forall(_.exists("wafer_pipeline".startsWith))) {
       def waferAt(n: Long, warm: Boolean): Double = {
-        val in = graft.wafer.WaferDataGen.generate(spark, n, parts = cpus.toInt).cache()
+        val in = graft.wafer.WaferDataGen.generate(
+          spark, n, parts = spark.sparkContext.defaultParallelism).cache()
         in.count()
         def once(): Double = {
           val t0 = System.nanoTime()

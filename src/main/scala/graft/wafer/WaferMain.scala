@@ -15,8 +15,7 @@ object WaferMain {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("wafer-defect-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
+      .config("spark.sql.shuffle.partitions", graft.GraftSession.cpus().toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, inputPath, outputDir)

@@ -19,13 +19,14 @@ class BloomMightContainSpec extends SparkSpec {
     val members = spark.range(0L, 2000L).toDF("id")
     val bf = members.stat.bloomFilter("id", 2000L, 0.01)
     val bfB = spark.sparkContext.broadcast(bf)
+    val (probe, drop) = BloomMightContain.column(spark, bfB, col("h"))
     try {
       val probes: Seq[java.lang.Long] =
         (0L until 50L).map(java.lang.Long.valueOf) ++
           Seq(123456789L, -1L, Long.MaxValue, Long.MinValue, 999999999999L)
             .map(java.lang.Long.valueOf) :+ (null: java.lang.Long)
       val df = probes.toDF("h")
-        .withColumn("got", BloomMightContain.column(spark, bfB, col("h")))
+        .withColumn("got", probe)
       val rows = df.collect()
       rows.foreach { r =>
         if (r.isNullAt(0)) assert(r.isNullAt(1), "null hash must yield null")
@@ -36,7 +37,7 @@ class BloomMightContainSpec extends SparkSpec {
       assert(rows.filter(r => !r.isNullAt(0) &&
           r.getLong(0) >= 0L && r.getLong(0) < 2000L)
         .forall(_.getBoolean(1)))
-    } finally bfB.destroy()
+    } finally { drop(); bfB.destroy() }
   }
 
   test("two filters active at once stay independently bound (unique registry names)") {
@@ -44,10 +45,12 @@ class BloomMightContainSpec extends SparkSpec {
     val bfBf = spark.range(5000L, 5100L).toDF("id").stat.bloomFilter("id", 100L, 0.01)
     val hA = spark.sparkContext.broadcast(bfA)
     val hB = spark.sparkContext.broadcast(bfBf)
+    val (probeA, dropA) = BloomMightContain.column(spark, hA, col("h"))
+    val (probeB, dropB) = BloomMightContain.column(spark, hB, col("h"))
     try {
       val df = Seq(7L, 5007L).toDF("h")
-        .withColumn("inA", BloomMightContain.column(spark, hA, col("h")))
-        .withColumn("inB", BloomMightContain.column(spark, hB, col("h")))
+        .withColumn("inA", probeA)
+        .withColumn("inB", probeB)
         .orderBy("h")
       val got = df.collect().map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2)))
       assert(got(0)._2 === true)   // 7 ∈ A
@@ -57,6 +60,18 @@ class BloomMightContainSpec extends SparkSpec {
       // deterministic for this fixed seed-free construction)
       assert(got(0)._3 === bfBf.mightContainLong(7L))
       assert(got(1)._2 === bfA.mightContainLong(5007L))
-    } finally { hA.destroy(); hB.destroy() }
+    } finally { dropA(); dropB(); hA.destroy(); hB.destroy() }
+  }
+
+  test("a triangle count leaves the session's function registry as it found it") {
+    // two triangles, {1,2,3} and {2,3,4}; distinct u<v edges, so the
+    // Bloom pre-filter (and its temp function) is on the path
+    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("u", "v")
+    val registry = spark.sessionState.functionRegistry
+    val before = registry.listFunction().size
+    for (pass <- 1 to 2) {
+      assert(graft.operators.Graphs.exactTriangleCount(e) === 2L)
+      assert(registry.listFunction().size === before, s"registry grew on pass $pass")
+    }
   }
 }

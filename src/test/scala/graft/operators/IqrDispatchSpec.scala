@@ -22,16 +22,18 @@ class IqrDispatchSpec extends SparkSpec {
     "BroadcastHashJoin|BroadcastNestedLoopJoin".r
       .findAllIn(df.queryExecution.executedPlan.toString).length
 
-  private def withLimit[A](limit: String)(body: => A): A = {
-    val key = "spark.graft.iqr.localLimit"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, limit)
+  private def withConfs[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
   }
+
+  private def withLimit[A](limit: String)(body: => A): A =
+    withConfs("spark.graft.iqr.localLimit" -> limit)(body)
 
   private def canon(rows: Array[Row]): Seq[Seq[Any]] =
     rows.toSeq
@@ -128,19 +130,18 @@ class IqrDispatchSpec extends SparkSpec {
     assert(joinCount(out2) === 2, "…two passes betray the distributed path")
   }
 
-  private def withSort[A](on: Boolean)(body: => A): A = {
-    val key = "spark.graft.iqr.sortBounds"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, on.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  /** Forces a distributed exact-bounds strategy: a 1-row localLimit
+    * takes the probe count and routes past the driver replay, then a
+    * 1-row bufferedBoundsLimit picks the sort strategy and 0 the
+    * buffered aggregate.
+    */
+  private def withStrategy[A](sort: Boolean)(body: => A): A =
+    withConfs(
+      "spark.graft.iqr.localLimit" -> "1",
+      "spark.graft.iqr.bufferedBoundsLimit" -> (if (sort) "1" else "0"))(body)
 
   test("sort-strategy bounds are bit-identical to the buffered percentile aggregate") {
-    // Forced distributed (localLimit=0), A/B on the exact-bounds
+    // Forced distributed (withStrategy), A/B on the exact-bounds
     // strategy: order-statistics-over-rank vs value-buffering
     // percentile. Same order stats + same interpolation arithmetic ⇒
     // the survivor sets must match bit-for-bit on every adversarial
@@ -148,24 +149,24 @@ class IqrDispatchSpec extends SparkSpec {
     // bounds row or the inner join would silently drop them).
     for (seed <- 11 to 14) {
       val df = randomFrame(seed)
-      val sorted = withLimit("0")(withSort(true)(
-        IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2"))))
-      val buffered = withLimit("0")(withSort(false)(
-        IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2"))))
+      val sorted = withStrategy(sort = true)(
+        IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2")))
+      val buffered = withStrategy(sort = false)(
+        IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2")))
       assert(canon(sorted.collect()) === canon(buffered.collect()), s"seed $seed")
     }
     // kept null keys + empty groupCols through the sort strategy
     val df = randomFrame(15)
     assert(
-      canon(withLimit("0")(withSort(true)(
-        IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2"), dropNullKeys = false))).collect()) ===
-      canon(withLimit("0")(withSort(false)(
-        IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2"), dropNullKeys = false))).collect()))
+      canon(withStrategy(sort = true)(
+        IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2"), dropNullKeys = false)).collect()) ===
+      canon(withStrategy(sort = false)(
+        IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2"), dropNullKeys = false)).collect()))
     assert(
-      canon(withLimit("0")(withSort(true)(
-        IqrOutlierFilter(df, Seq.empty, Seq("c1")))).collect()) ===
-      canon(withLimit("0")(withSort(false)(
-        IqrOutlierFilter(df, Seq.empty, Seq("c1")))).collect()))
+      canon(withStrategy(sort = true)(
+        IqrOutlierFilter(df, Seq.empty, Seq("c1"))).collect()) ===
+      canon(withStrategy(sort = false)(
+        IqrOutlierFilter(df, Seq.empty, Seq("c1"))).collect()))
   }
 
   test("a group whose values are all null emits a bounds row on the sort path") {
@@ -175,8 +176,8 @@ class IqrDispatchSpec extends SparkSpec {
       ("g", Some(1.0), Some(1.0)), ("g", Some(2.0), Some(2.0)),
       ("g", Some(3.0), Some(3.0)), ("g", Some(100.0), Some(4.0))
     ).toDF("g", "c1", "c2")
-    val out = withLimit("0")(withSort(true)(
-      IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2"))))
+    val out = withStrategy(sort = true)(
+      IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2")))
     // gnull has cnt=0 on c1 → skipped (rows kept, nulls included);
     // g filters its c1 outlier
     assert(out.filter(col("g") === "gnull").count() === 2)
