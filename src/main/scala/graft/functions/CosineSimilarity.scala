@@ -74,14 +74,20 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Idempotently register `graft_cosine(a, b)` in the session's
-    * function registry so expr()/SQL can use it.
+  /** Register `graft_cosine(a, b)` in the session's function registry
+    * so expr()/SQL can use it. A no-op when the name is already
+    * registered, so per-build calls neither replace the builder nor log
+    * Spark's "replaced a previously registered function" warning.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine")))
+      registry.createOrReplaceTempFunction(
+        "graft_cosine",
+        exprs => CosineSimilarity(exprs(0), exprs(1)),
+        "built-in")
+  }
 
   /** Injection triple for SparkSessionExtensions.injectFunction (the
     * spark.sql.extensions activation path — see graft.plans.GraftExtensions).

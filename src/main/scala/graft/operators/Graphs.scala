@@ -10,6 +10,23 @@ import org.apache.spark.sql.functions._
   * algorithm's resource with an aggregation the query needs anyway, then
   * route exact vs a deterministic sampled estimator).
   *
+  * Triangle tiers ([[triangleStats]] for q143/q342,
+  * [[triangleDegreeStats]] for q165). Both open with one aggregate over
+  * the edge list that counts it and checks the input contract (u < v,
+  * no null id), then route:
+  *
+  *  - ≤ 500k edges (the `cc.localLimit` scale) → the pairs are collected
+  *    once and [[localTriangleCensus]] answers on the driver. At this
+  *    size the Spark plans are bound by job launches (16–24 jobs for a
+  *    graph of ~10⁵ edges), not by the wedge work, which the
+  *    degree-ordered array count does in milliseconds;
+  *  - above → the distributed plans: q143's id-oriented
+  *    [[exactTriangleCount]], q165's degree-oriented wedge join.
+  *
+  * On either tier, a wedge mass Σ deg² over
+  * `spark.graft.graph.wedgeMassLimit` routes n_triangles to the sampled
+  * estimator below (run on Spark; n_nodes/n_edges/max_outdeg stay exact).
+  *
   * The estimator is DOULION-shaped (Tsourakakis et al., KDD'09: count
   * triangles on an edge-sampled graph, rescale by the inverse sampling
   * probability cubed) but with DETERMINISTIC hash selection instead of
@@ -41,6 +58,12 @@ object Graphs {
     * exact). Overridable via conf `spark.graft.graph.kcoreEdgeLimit`.
     */
   val defaultKcoreEdgeLimit: Long = 10000000L
+
+  /** Edge-list size at or under which the triangle queries count on the
+    * driver (see the object doc). 500k pairs are ~8 MB collected; the
+    * sf0.01 graph (115,729 edges) is local, sf0.1 (1.2M) distributed.
+    */
+  private val LocalEdgeLimit: Long = 500000L
 
   /** Oriented (u < v), distinct co-purchase edges: parts that share an
     * order. Checkpointed — every caller fans out over it (degree aggs,
@@ -114,9 +137,8 @@ object Graphs {
     * the closing join is SHUFFLE_HASH-hinted so the wedge stream (the
     * Σ deg² mass) is hash-probed against the edge list, never sorted.
     *
-    * Bloom pre-filter on the closing join (round 13, guide §3.2):
-    * triangles << wedges — at sf0.1 the wedge stream is 49.3M rows
-    * against a 1.2M-row edge list, and all but the closing ~0.5% of it
+    * Bloom pre-filter on the closing join: triangles << wedges — at
+    * sf0.1 the wedge stream is 49.3M rows against a 1.2M-row edge list, and all but the closing ~0.5% of it
     * was shuffled into the closing join only to find no match. A
     * broadcast Bloom filter over xxhash64(u,v) of the edge list
     * (~1.4 MB at fpp 1% for 1.2M edges) drops definitely-non-closing
@@ -130,7 +152,7 @@ object Graphs {
     * Scale gate: past `spark.graft.graph.triangleBloomMaxEdges`
     * (default 10⁸ ≈ 115 MB of filter at 1% — broadcastable; billions
     * of edges would not be) the pre-filter is skipped and the plan is
-    * the unfiltered r12 form. `knownEdgeCount` lets callers that
+    * the unfiltered join. `knownEdgeCount` lets callers that
     * already counted the edge list (triangleStats) avoid a second
     * count job; pass a NON-NEGATIVE count only for the exact frame
     * being joined.
@@ -162,7 +184,7 @@ object Graphs {
   /** Shared closing-join Bloom pre-filter (see [[exactTriangleCount]]):
     * a broadcast Bloom over xxhash64(ku, kv) of `edges`, returned as a
     * predicate on the probe stream's (pu, pv). `lit(true)` (the
-    * unfiltered r12 plan) when the edge list is empty or larger than
+    * unfiltered join) when the edge list is empty or larger than
     * `spark.graft.graph.triangleBloomMaxEdges` — a multi-billion-edge
     * filter would not broadcast. No false negatives, order-independent
     * bitset merge: the downstream equi-join's result is identical and
@@ -179,10 +201,8 @@ object Graphs {
     if (nEdges > 0 && nEdges <= bloomMax) {
       val bf = edges.stat.bloomFilter(xxhash64(ku, kv), nEdges, 0.01)
       val bfB = s.sparkContext.broadcast(bf)
-      // compiled probe (round 14, guide §4): the round-13 form was a
-      // ScalaUDF in the wedge join's condition — boxing + the UDF
-      // bridge on the query's hottest stream; BloomMightContain is the
-      // same probe as a codegen'd Catalyst expression
+      // a codegen'd Catalyst probe, not a ScalaUDF: no boxing or UDF
+      // bridge on the query's hottest stream
       val (probe, dropProbe) =
         graft.functions.BloomMightContain.column(s, bfB, xxhash64(pu, pv))
       BloomPred(probe, () => { dropProbe(); bfB.destroy(); () })
@@ -198,12 +218,169 @@ object Graphs {
       .map(_.asInstanceOf[Long]).getOrElse(0L)
   }
 
-  /** Triangle census (n_nodes, n_edges, n_triangles) with a
-    * SCALE-DISPATCHED count: n_nodes/n_edges are always exact (linear
-    * passes), and the measured wedge mass routes n_triangles:
+  /** Exact census of a graph given as distinct u < v id pairs
+    * (`us(i)`, `vs(i)`), all on the driver in primitive arrays:
+    *
+    *  - ids re-index densely (sorted distinct ids, binary search per
+    *    endpoint), so ids past Int.MaxValue are fine;
+    *  - the re-indexed pairs are sorted, which also finds duplicates;
+    *  - each edge points from the lower to the higher (degree, id), the
+    *    orientation q165 uses, so every out-degree is O(√m);
+    *  - sorted CSR out-lists; for each node a, its out-neighbours are
+    *    marked, and every out-out path a→b→c with c marked closes one
+    *    triangle (Chiba–Nishizeki), each triangle counted once at its
+    *    lowest-ranked vertex.
+    *
+    * Work is O(m log m + m^1.5). Throws IllegalArgumentException on a
+    * pair with u >= v or a repeated pair.
+    */
+  def localTriangleCensus(us: Array[Long], vs: Array[Long]): TriangleCensus = {
+    require(us.length == vs.length, "us and vs must have the same length")
+    val m = us.length
+    var i = 0
+    val ids = {
+      val all = java.util.Arrays.copyOf(us, 2 * m)
+      System.arraycopy(vs, 0, all, m, m)
+      java.util.Arrays.sort(all)
+      var k = 0
+      i = 0
+      while (i < all.length) {
+        if (k == 0 || all(i) != all(k - 1)) { all(k) = all(i); k += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(all, k)
+    }
+    val n = ids.length
+    // (index(u) << 32) | index(v): both indices are non-negative ints
+    val pairs = new Array[Long](m)
+    i = 0
+    while (i < m) {
+      if (us(i) >= vs(i)) throw new IllegalArgumentException(
+        s"triangle input must be u < v pairs: got (${us(i)}, ${vs(i)})")
+      pairs(i) = (java.util.Arrays.binarySearch(ids, us(i)).toLong << 32) |
+        java.util.Arrays.binarySearch(ids, vs(i))
+      i += 1
+    }
+    java.util.Arrays.sort(pairs)
+    val deg = new Array[Int](n)
+    i = 0
+    while (i < m) {
+      if (i > 0 && pairs(i) == pairs(i - 1)) throw new IllegalArgumentException(
+        s"triangle input must be distinct pairs: (${ids((pairs(i) >>> 32).toInt)}, " +
+          s"${ids(pairs(i).toInt)}) repeats")
+      deg((pairs(i) >>> 32).toInt) += 1
+      deg(pairs(i).toInt) += 1
+      i += 1
+    }
+    // CSR out-lists under the (degree, index) orientation; index order
+    // is id order, so this is q165's (degree, id) rule
+    val off = new Array[Int](n + 1)
+    val src = new Array[Int](m)
+    val dst = new Array[Int](m)
+    i = 0
+    while (i < m) {
+      val a = (pairs(i) >>> 32).toInt
+      val b = pairs(i).toInt
+      val aFirst = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+      src(i) = if (aFirst) a else b
+      dst(i) = if (aFirst) b else a
+      off(src(i) + 1) += 1
+      i += 1
+    }
+    var maxOut = 0
+    var wedgeMass = 0L
+    i = 0
+    while (i < n) {
+      maxOut = math.max(maxOut, off(i + 1))
+      wedgeMass += deg(i).toLong * deg(i)
+      off(i + 1) += off(i)
+      i += 1
+    }
+    val adj = new Array[Int](m)
+    val fill = java.util.Arrays.copyOf(off, n)
+    i = 0
+    while (i < m) {
+      adj(fill(src(i))) = dst(i)
+      fill(src(i)) += 1
+      i += 1
+    }
+    val mark = Array.fill(n)(-1)
+    var triangles = 0L
+    var a = 0
+    while (a < n) {
+      java.util.Arrays.sort(adj, off(a), off(a + 1))
+      var j = off(a)
+      while (j < off(a + 1)) { mark(adj(j)) = a; j += 1 }
+      j = off(a)
+      while (j < off(a + 1)) {
+        val b = adj(j)
+        var k = off(b)
+        while (k < off(b + 1)) {
+          if (mark(adj(k)) == a) triangles += 1
+          k += 1
+        }
+        j += 1
+      }
+      a += 1
+    }
+    TriangleCensus(n.toLong, m.toLong, wedgeMass, maxOut.toLong, triangles)
+  }
+
+  /** What [[localTriangleCensus]] measures: node and edge counts, the
+    * wedge mass Σ deg², the largest out-degree under the (degree, id)
+    * orientation, and the exact triangle count.
+    */
+  final case class TriangleCensus(nNodes: Long, nEdges: Long,
+      wedgeMass: Long, maxOutDeg: Long, triangles: Long)
+
+  /** The triangle queries' opening job: ONE aggregate counts the edge
+    * list and the pairs that break the u < v contract (a null id counts
+    * as a break), and throws IllegalArgumentException on any. Distinct
+    * pairs are the caller's duty on the distributed tier; the local
+    * census checks them while it sorts. At or under `localEdgeLimit`
+    * edges (0 turns the local tier off) the pairs are collected and
+    * counted on the driver — Right(census); otherwise Left(edge count).
+    */
+  private def triangleDispatch(e: DataFrame,
+      localEdgeLimit: Long): Either[Long, TriangleCensus] = {
+    val row = e.agg(count(lit(1)),
+      count_if(!coalesce(col("u") < col("v"), lit(false)))).first()
+    val (m, bad) = (row.getLong(0), row.getLong(1))
+    if (bad > 0) throw new IllegalArgumentException(
+      s"triangle input must be u < v pairs: $bad of $m pairs have u >= v or a null id")
+    if (localEdgeLimit <= 0 || m > localEdgeLimit) Left(m)
+    else {
+      val rows = e.select(col("u").cast("long"), col("v").cast("long")).collect()
+      Right(localTriangleCensus(rows.map(_.getLong(0)), rows.map(_.getLong(1))))
+    }
+  }
+
+  /** Wedge-mass limit and sample modulus: the explicit argument when
+    * given (limit >= 0, mod > 0), else the session conf, else the default.
+    */
+  private def wedgeSettings(e: DataFrame, wedgeMassLimit: Long,
+      sampleMod: Int): (Long, Int) = {
+    val conf = e.sparkSession.conf
+    val limit =
+      if (wedgeMassLimit >= 0) wedgeMassLimit
+      else conf.get("spark.graft.graph.wedgeMassLimit",
+        LinkPrediction.defaultWedgeMassLimit.toString).toLong
+    val p =
+      if (sampleMod > 0) sampleMod
+      else conf.get("spark.graft.graph.sampleMod",
+        defaultSampleMod.toString).toInt
+    (limit, p)
+  }
+
+  /** Triangle census (n_nodes, n_edges, n_triangles) of a distinct u < v
+    * edge list — q143, and q342 with the limit pinned to 0. Tier by
+    * edge count (see the object doc): the driver census at or under
+    * `localEdgeLimit`, else one degree aggregate for n_nodes and the
+    * wedge mass plus [[exactTriangleCount]]. n_nodes/n_edges are always
+    * exact; the wedge mass routes n_triangles:
     *
     *  - mass ≤ `spark.graft.graph.wedgeMassLimit` (default 5·10⁸, the
-    *    `LinkPrediction` ceiling) → [[exactTriangleCount]];
+    *    `LinkPrediction` ceiling) → the exact count of the tier;
     *  - above → DOULION on the deterministic 1-in-p sample: exact count
     *    on the sampled graph × p³ (each triangle survives with p⁻³).
     *    Semantics in this regime: an unbiased deterministic estimate
@@ -211,39 +388,101 @@ object Graphs {
     *    wedge-bound count alive on a dense 100 TB graph.
     */
   def triangleStats(e: DataFrame, wedgeMassLimit: Long = -1L,
-      sampleMod: Int = -1): DataFrame = {
-    val s = e.sparkSession
-    val limit =
-      if (wedgeMassLimit >= 0) wedgeMassLimit
-      else s.conf.get("spark.graft.graph.wedgeMassLimit",
-        LinkPrediction.defaultWedgeMassLimit.toString).toLong
-    val p =
-      if (sampleMod > 0) sampleMod
-      else s.conf.get("spark.graft.graph.sampleMod",
-        defaultSampleMod.toString).toInt
-    // Fused census pass (round 14, guide §2.4): n_nodes, n_edges and
-    // the wedge mass are all moments of ONE degree table — every node
-    // appears as `u` in the doubled edge set, so count(deg) = |V|;
-    // the input is a distinct u<v pair list with no self-loops, so
-    // Σ deg = 2|E| exactly; Σ deg² is the wedge mass. One keyed agg +
-    // one scalar agg replace the r13 census's three separate full-edge
-    // passes (wedgeMass agg, e.count, union+distinct node count). The
-    // edge count still reaches exactTriangleCount so the bloom
-    // pre-filter sizes itself without its own count job.
-    val deg = doubled(e).groupBy("u").agg(count(lit(1)).as("dg"))
-    val census = deg.agg(
-      count(lit(1)).as("n"),
-      sum(col("dg")).as("sd"),
-      sum(col("dg") * col("dg")).as("m")).first()
-    val nodes = census.getLong(0)
-    val edges = Option(census.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L) / 2
-    val mass = Option(census.get(2)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val tri =
-      if (mass <= limit) exactTriangleCount(e, knownEdgeCount = edges)
-      else exactTriangleCount(sampleEdges(e, p).localCheckpoint()) *
-        p.toLong * p * p
-    import s.implicits._
+      sampleMod: Int = -1, localEdgeLimit: Long = LocalEdgeLimit): DataFrame = {
+    val (limit, p) = wedgeSettings(e, wedgeMassLimit, sampleMod)
+    def sampled = exactTriangleCount(sampleEdges(e, p).localCheckpoint()) *
+      p.toLong * p * p
+    val (nodes, edges, tri) = triangleDispatch(e, localEdgeLimit) match {
+      case Right(c) =>
+        (c.nNodes, c.nEdges, if (c.wedgeMass <= limit) c.triangles else sampled)
+      case Left(edges) =>
+        // n_nodes and the wedge mass are two moments of ONE degree
+        // table: every node appears as `u` in the doubled edge set, so
+        // count(deg) = |V|, and Σ deg² is the wedge mass
+        val deg = doubled(e).groupBy("u").agg(count(lit(1)).as("dg"))
+        val census = deg.agg(
+          count(lit(1)).as("n"),
+          sum(col("dg") * col("dg")).as("m")).first()
+        val mass = Option(census.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
+        (census.getLong(0), edges,
+          if (mass <= limit) exactTriangleCount(e, knownEdgeCount = edges)
+          else sampled)
+    }
+    import e.sparkSession.implicits._
     Seq((nodes, edges, tri)).toDF("n_nodes", "n_edges", "n_triangles")
+  }
+
+  /** Degree-ordered triangle census (n_edges, n_triangles, max_outdeg)
+    * of a distinct u < v edge list — q165. Edges orient low-(degree, id)
+    * → high-(degree, id), so every out-degree is O(√m) whatever the
+    * degree distribution; max_outdeg witnesses that bound. Same tiers
+    * and wedge-mass routing as [[triangleStats]]; on the sampled branch
+    * the 1-in-p sample gets its OWN degree orientation, and n_edges and
+    * max_outdeg stay exact from the full graph's.
+    */
+  def triangleDegreeStats(e: DataFrame, wedgeMassLimit: Long = -1L,
+      sampleMod: Int = -1, localEdgeLimit: Long = LocalEdgeLimit): DataFrame = {
+    val (limit, p) = wedgeSettings(e, wedgeMassLimit, sampleMod)
+    def sampled = {
+      val sde = orient(sampleEdges(e, p).localCheckpoint())
+      orientedTriangleCount(sde, sde.count()) * p.toLong * p * p
+    }
+    val (nEdges, tri, maxOut) = triangleDispatch(e, localEdgeLimit) match {
+      case Right(c) =>
+        (c.nEdges, if (c.wedgeMass <= limit) c.triangles else sampled, c.maxOutDeg)
+      case Left(edges) =>
+        val de = orient(e)
+        val maxOut = Option(de.groupBy("s").agg(count(lit(1)).as("od"))
+          .agg(max("od")).first().get(0))
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
+        (edges,
+          if (wedgeMass(e) <= limit) orientedTriangleCount(de, edges) else sampled,
+          maxOut)
+    }
+    import e.sparkSession.implicits._
+    Seq((nEdges, tri, maxOut)).toDF("n_edges", "n_triangles", "max_outdeg")
+  }
+
+  /** (s, t) edges oriented low-(degree, id) → high-(degree, id),
+    * checkpointed: the wedge self-join reads it twice.
+    */
+  private def orient(e: DataFrame): DataFrame = {
+    val deg = e.select(col("u").as("n"))
+      .unionAll(e.select(col("v").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("dg"))
+    val uFirst = col("du") < col("dv") ||
+      (col("du") === col("dv") && col("u") < col("v"))
+    e.join(deg.withColumnRenamed("n", "u").withColumnRenamed("dg", "du"), "u")
+      .join(deg.withColumnRenamed("n", "v").withColumnRenamed("dg", "dv"), "v")
+      .select(when(uFirst, col("u")).otherwise(col("v")).as("s"),
+        when(uFirst, col("v")).otherwise(col("u")).as("t"))
+      .localCheckpoint()
+  }
+
+  /** Exact triangle count over a degree-oriented (s, t) list of `nEdges`
+    * edges. Each unordered out-pair enumerates ONCE (t1 < t2 — half the
+    * Σ out-deg² mass of the both-orders form); the closing edge joins in
+    * id-canonical form (x < y) so one equi-key catches whichever way the
+    * orientation pointed it. As in [[exactTriangleCount]], the closing
+    * join is SHUFFLE_HASH (the wedge stream is probed, never sorted) and
+    * a Bloom filter over the closing edges drops non-closing out-pairs
+    * before the exchange: the out-pair key (w1.t, w2.t) is already
+    * ordered, matching (x, y).
+    */
+  private def orientedTriangleCount(de: DataFrame, nEdges: Long): Long = {
+    val cDe = de.select(
+      least(col("s"), col("t")).as("x"), greatest(col("s"), col("t")).as("y"))
+    val bp = closingBloomPred(
+      cDe, nEdges, col("x"), col("y"), col("w1.t"), col("w2.t"))
+    val n = de.as("w1")
+      .join(de.as("w2"),
+        col("w1.s") === col("w2.s") && col("w1.t") < col("w2.t"))
+      .filter(bp.pred)
+      .join(cDe.hint("SHUFFLE_HASH"),
+        col("x") === col("w1.t") && col("y") === col("w2.t"))
+      .count()
+    bp.release()
+    n
   }
 
   /** k-core peel census (round, n_nodes, n_edges) over `rounds` rounds

@@ -427,20 +427,22 @@ object Training6 {
 
     // ---- triangle counting over the co-purchase graph (parts that
     // share an order), completing the graph family (q71/q109 CC +
-    // PageRank). The plan is the standard oriented-edge scheme: edges
-    // are kept only as u < v, so each triangle is ONE (e1:a→b, e2:b→c,
-    // e3:a→c) row and the count needs no /6 correction — two shuffle
-    // equi-joins over the edge list, never a cross join, with the
-    // closing join SHUFFLE_HASH-hinted so the wedge stream is probed,
-    // never sorted (Graphs.exactTriangleCount). SCALE-DISPATCHED
-    // (round 9): Graphs.triangleStats measures the wedge mass Σ deg²
-    // — the exact count's resource — and above
-    // `spark.graft.graph.wedgeMassLimit` routes the count to the
-    // deterministic DOULION estimate (exact count on the 1-in-p
-    // hash-selected edge sample × p³; q342 declares and hash-oracles
-    // that branch). The harness-scale mass (~3·10⁸ at sf0.1) stays
-    // under the 5·10⁸ default, so THIS declared entry runs — and is
-    // oracled — exact; the 10× sweep's 3·10⁹ mass routes sampled.
+    // PageRank). Graphs.triangleStats picks the tier by edge count:
+    //  - ≤ 500k edges (sf0.01's 115,729): one edge collect and a
+    //    degree-ordered array count on the driver — the Spark plan
+    //    would spend ~16 job launches on a graph this small;
+    //  - above (sf0.1's 1.2M): the oriented-edge join. Edges are kept
+    //    as u < v, so each triangle is ONE (a→b, b→c, a→c) row and the
+    //    count needs no /6 correction — two shuffle equi-joins, the
+    //    closing one SHUFFLE_HASH-hinted so the wedge stream is probed,
+    //    never sorted (Graphs.exactTriangleCount).
+    // On either tier a wedge mass Σ deg² over
+    // `spark.graft.graph.wedgeMassLimit` (default 5·10⁸) routes the
+    // count to the deterministic DOULION estimate (exact count on the
+    // 1-in-p hash-selected edge sample × p³; q342 declares and
+    // hash-oracles that branch). The harness masses (~3·10⁸ at sf0.1)
+    // stay under the default, so THIS entry is exact and oracled on
+    // both tiers.
     QueryDef(
       "q143_triangle_count",
       (s, d) =>

@@ -381,109 +381,25 @@ object Training9 {
           FROM lineitem)
         SELECT count(*) AS n_rows, bit_xor(h) AS digest FROM h""")),
 
-    // ---- degree-ordered triangle counting: the power-law hardening
-    // q143's scaladoc promises. Edges orient low-(degree, id) →
-    // high-(degree, id); every triangle then has exactly one apex with
-    // two out-edges and a directed closing edge between their heads, so
-    // the count is one wedge self-join + one closure join — and the
-    // out-degree of ANY node is O(√m) on arbitrary graphs (a
-    // high-degree hub receives edges instead of emitting them), which
-    // is the bound that keeps wedge fan-out tame where q143's id-order
-    // orientation degrades on hubs. max_outdeg is emitted as the
-    // witness of exactly that bound. Same n_triangles as q143 by
-    // construction — the spec asserts the identity.
+    // ---- degree-ordered triangle counting: edges orient
+    // low-(degree, id) → high-(degree, id), so every triangle has
+    // exactly one apex with two out-edges and a closing edge between
+    // their heads, and the out-degree of ANY node is O(√m) (a hub
+    // receives edges instead of emitting them) — the bound that keeps
+    // wedge fan-out tame where q143's id order degrades on hubs.
+    // max_outdeg witnesses that bound; n_triangles equals q143's by
+    // construction (Training9Spec asserts the identity). Tiers live in
+    // Graphs.triangleDegreeStats: graphs of ≤ 500k edges (sf0.01) are
+    // counted on the driver after one edge collect, because the Spark
+    // plan costs ~22 job launches on a graph that small; larger ones
+    // (sf0.1) run the degree-oriented wedge join, and a wedge mass over
+    // `spark.graft.graph.wedgeMassLimit` routes the count to the
+    // deterministic 1-in-p DOULION sample (q143's estimator).
     QueryDef(
       "q165_triangle_degree",
-      (s, d) => {
-        // shared localCheckpoint'd edge build (Graphs.coPurchaseEdges):
-        // deg (via the unionAll below) and the orientation join would
-        // otherwise re-run the co-occurrence self-join + distinct THREE
-        // times inside the de job — the expensive stage of the whole
-        // query, and the term that made the 10x ScaleCheck ratio
-        // superlinear before the checkpoint.
-        val e = graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))
-        // low-(degree, id) → high-(degree, id) orientation of an edge
-        // list: out-degree is O(√m) on ANY graph
-        def orient(edges: org.apache.spark.sql.DataFrame) = {
-          val deg = edges.select(col("u").as("n"))
-            .unionAll(edges.select(col("v").as("n")))
-            .groupBy("n").agg(count(lit(1)).as("dg"))
-          edges
-            .join(deg.withColumnRenamed("n", "u").withColumnRenamed("dg", "du"), "u")
-            .join(deg.withColumnRenamed("n", "v").withColumnRenamed("dg", "dv"), "v")
-            .select(
-              when(col("du") < col("dv") ||
-                (col("du") === col("dv") && col("u") < col("v")), col("u"))
-                .otherwise(col("v")).as("s"),
-              when(col("du") < col("dv") ||
-                (col("du") === col("dv") && col("u") < col("v")), col("v"))
-                .otherwise(col("u")).as("t"))
-            .localCheckpoint()
-        }
-        // Each unordered out-pair enumerates ONCE (t1 < t2 — half the
-        // Σ out-deg² mass of the both-orders form); the closing edge
-        // joins in id-canonical rendering so one equi-key catches
-        // whichever way the degree orientation pointed it. SHUFFLE_HASH
-        // (same rationale as q143): never sort the wedge stream —
-        // hash-build on the edge list and stream wedges through.
-        // Closing-join bloom pre-filter (round 13, guide §3.2 — shared
-        // with q143, Graphs.closingBloomPred): the out-pair stream is
-        // the Σ out-deg² mass and almost none of it closes; the wedge
-        // key (w1.t, w2.t) is already ordered (w1.t < w2.t), matching
-        // cDe's canonical (x, y), so one broadcast bloom over cDe drops
-        // non-closing pairs BEFORE the exchange. No false negatives ⇒
-        // identical count; gate + determinism per the helper's doc.
-        def wedgeCount(de: org.apache.spark.sql.DataFrame, deCount: Long): Long = {
-          val cDe = de.select(
-            least(col("s"), col("t")).as("x"), greatest(col("s"), col("t")).as("y"))
-          val bp = graft.operators.Graphs.closingBloomPred(
-            cDe, deCount, col("x"), col("y"), col("w1.t"), col("w2.t"))
-          val n = de.as("w1")
-            .join(de.as("w2"),
-              col("w1.s") === col("w2.s") && col("w1.t") < col("w2.t"))
-            .filter(bp.pred)
-            .join(cDe.hint("SHUFFLE_HASH"),
-              col("x") === col("w1.t") && col("y") === col("w2.t"))
-            .count()
-          bp.release()
-          n
-        }
-        val de = orient(e)
-        // SCALE DISPATCH (round-11 verdict item 5 — the q143/q343
-        // pattern): the wedge join is the one super-linear stage, so
-        // the measured wedge mass routes it. Below the limit (every
-        // harness correctness run — the oracle pins this branch) the
-        // count is exact; above, DOULION on the deterministic 1-in-p
-        // sample — a NEW degree orientation of the sampled graph (its
-        // own degrees), exact count on it, ×p³ rescale: identical
-        // estimator semantics to q143's sampled branch, error
-        // O(√(p³/T)). n_edges and max_outdeg stay exact from the FULL
-        // orientation (both linear) — max_outdeg keeps witnessing the
-        // O(√m) bound of the graph the user asked about.
-        val limit = s.conf.get("spark.graft.graph.wedgeMassLimit",
-          graft.operators.LinkPrediction.defaultWedgeMassLimit.toString).toLong
-        val p = s.conf.get("spark.graft.graph.sampleMod",
-          graft.operators.Graphs.defaultSampleMod.toString).toInt
-        // Fused out-degree pass (round 14, guide §2.4 — the q143 census
-        // discipline): n_edges = Σ out-deg and max_outdeg are two
-        // moments of ONE groupBy(s) aggregate, replacing the separate
-        // de.count() job; n_edges still reaches the bloom pre-filter so
-        // it sizes itself without its own count job.
-        val odRow = de.groupBy("s").agg(count(lit(1)).as("od"))
-          .agg(max("od").as("m"), sum("od").as("ne")).collect().head
-        val maxOut = Option(odRow.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-        val nEdges = Option(odRow.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
-        val tri =
-          if (graft.operators.Graphs.wedgeMass(e) <= limit) wedgeCount(de, nEdges)
-          else {
-            val sde = orient(
-              graft.operators.Graphs.sampleEdges(e, p).localCheckpoint())
-            wedgeCount(sde, sde.count()) * p.toLong * p * p
-          }
-        import s.implicits._
-        Seq((nEdges, tri, maxOut))
-          .toDF("n_edges", "n_triangles", "max_outdeg")
-      },
+      (s, d) =>
+        graft.operators.Graphs.triangleDegreeStats(
+          graft.operators.Graphs.coPurchaseEdges(t(s, d, "lineitem"))),
       Some("""
         WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         e AS (

@@ -36,4 +36,20 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[graft_cosine.*"), plan)
     assert(df.filter(abs(col("c") - 1.0) < 1e-12).count() === 100)
   }
+
+  test("register is a no-op once graft_cosine is registered") {
+    // a replacing registration stores a fresh ExpressionInfo (the builder
+    // is a non-capturing lambda, one instance either way), so identity of
+    // both shows whether the entry was replaced
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine")
+    val registry = spark.sessionState.functionRegistry
+    CosineSimilarity.register(spark)
+    val (builder, info) = (registry.lookupFunctionBuilder(id), registry.lookupFunction(id))
+    assert(builder.isDefined && info.isDefined)
+    CosineSimilarity.register(spark)
+    assert(registry.lookupFunctionBuilder(id).get eq builder.get,
+      "a second register replaced the builder")
+    assert(registry.lookupFunction(id).get eq info.get,
+      "a second register replaced the entry")
+  }
 }
