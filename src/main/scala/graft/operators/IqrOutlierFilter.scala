@@ -29,7 +29,9 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructT
   *
   * Scale: the bounds side is ≤ #groups rows → always broadcast. The data
   * side is scanned once per column pass; callers with expensive upstream
-  * plans should cache the input. The exact strategy is SIZE-DISPATCHED
+  * plans should cache or checkpoint the input, as
+  * `graft.wafer.WaferPipeline.loadCsv` does with its parsed CSV, so the
+  * passes read parsed rows. The exact strategy is SIZE-DISPATCHED
   * three ways on one count probe: driver bounds replay under
   * `spark.graft.iqr.localLimit` (100k), the value-buffering `percentile`
   * aggregate up to `spark.graft.iqr.bufferedBoundsLimit` (50M), and
@@ -189,7 +191,7 @@ object IqrOutlierFilter {
     * plain parallel collect (no limit node, no CollectLimit waves);
     * together with the caller's count, the under-limit path executes
     * the upstream twice — callers with expensive upstream plans should
-    * cache the input, as the scaladoc already directs.
+    * cache or checkpoint the input, as the object scaladoc directs.
     */
   private def localBoundsPlan(
       df: DataFrame,

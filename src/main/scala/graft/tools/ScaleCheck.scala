@@ -692,7 +692,8 @@ object ScaleCheck {
       "q386_partition_evolution", "q392_bucket_pruning",
       "q406_nested_schema_pruning")
     // Dispatch-boundary queries: their 1× leg runs the small-input
-    // driver dispatch (iqr.localLimit 1M sits between the legs), so the
+    // driver dispatch when iqr.localLimit (100k) sits between the legs,
+    // as it does for q22 from an sf0.01 base (60k → 600k rows), so the
     // 1× warm-up never compiles the DISTRIBUTED plan the N× leg
     // executes — every other roster query reuses its 1×-warmed codegen
     // classes at N×, but a boundary query's first N× run pays fresh

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.IOUtils
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
@@ -27,15 +28,16 @@ import graft.operators.IqrOutlierFilter
   *   - preprocess         ← G6 togglable composer
   *   - summary            ← I console report aggregates (D4-D10)
   *
-  * Scale: stages compose lazily into one Catalyst plan; callers should
-  * cache() the post-outlier frame when running the full pipeline (the
-  * one reused intermediate). The eager work inside the stages is:
+  * Scale: loadCsv parses the input once into a local checkpoint, and
+  * the stages compose lazily over it into one Catalyst plan; callers
+  * should cache() the labelled frame when more than one action reads it.
+  * The eager work inside the stages is:
+  *   - loadCsv: one job that parses the input into the checkpoint and
+  *     counts it for the empty-input check;
   *   - the outlier stage's per-group quantile bounds (tiny collects);
-  *   - runKMeansByStep: the row-id frame (`withId`) cached for the call,
-  *     one per-step moments aggregate, the fit (one z-vector collect for
-  *     the driver-local steps, cached MLlib fits past the limit, each
-  *     label frame `localCheckpoint`ed) and a `localCheckpoint` of the
-  *     labelled result, after which `withId` is released;
+  *   - runKMeansByStep: one per-step moments aggregate and the fit (one
+  *     collect of raw features for the driver-local steps, a cached MLlib
+  *     fit per step past the limit); the labels are a lazy projection;
   *   - summary and writeCsv, which are actions by definition.
   */
 object WaferPipeline {
@@ -43,6 +45,15 @@ object WaferPipeline {
   /** CSV ingest with the declared 25-column schema (A1). Fails fast on
     * missing path (AnalysisException) and empty input, mirroring
     * data_loader.py:42-48.
+    *
+    * The files are parsed once, like the reference's one `read_csv`: the
+    * frame is `localCheckpoint`ed (`MEMORY_AND_DISK`), and the empty-input
+    * check is the one job that fills the checkpoint, so every later scan
+    * — the outlier passes, the K-Means aggregate and collect, the export
+    * — reads parsed rows instead of re-tokenizing the CSV. The
+    * trade-off: the parsed input lives on the executors until the
+    * returned frame is garbage-collected, and lineage is cut at ingest,
+    * so the files may change or vanish after this returns.
     */
   def loadCsv(spark: SparkSession, path: String, encoding: String = "UTF-8"): DataFrame = {
     val df = spark.read
@@ -50,7 +61,10 @@ object WaferPipeline {
       .option("encoding", encoding)
       .schema(WaferSchema.inputSchema)
       .csv(path)
-    if (df.isEmpty) throw new IllegalArgumentException(s"empty dataset: $path")
+      .localCheckpoint(eager = false)
+    // counting computes every partition, which stores it in the checkpoint
+    if (df.queryExecution.toRdd.count() == 0)
+      throw new IllegalArgumentException(s"empty dataset: $path")
     df
   }
 
@@ -116,7 +130,28 @@ object WaferPipeline {
     .withColumn("DENSITY_SIGNAL",
       scrub(ieeeDiv(col("INTENSITY"), col("DEFECT_AREA") + lit(1e-6))))
 
-  /** Driver-side seeded Lloyd's over collected z-vectors — the
+  /** Index of the center nearest to `z` by squared Euclidean distance;
+    * ties break to the lower index. The local Lloyd's assigns with it and
+    * the local tier's label column predicts with it, so a fit-set row's
+    * label is its final Lloyd's assignment.
+    */
+  private def nearestCenter(z: Array[Double], centers: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < centers.length) {
+      var d = 0.0
+      var j = 0
+      while (j < z.length) {
+        val t = z(j) - centers(c)(j); d += t * t; j += 1
+      }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Driver-side seeded Lloyd's over (row id, z-vector) pairs — the
     * small-subset fit path of [[runKMeansByStep]]. Deterministic and
     * partition-invariant: rows are iterated in row-id order (float sums
     * see one fixed order), initial centers are the first k DISTINCT
@@ -124,10 +159,12 @@ object WaferPipeline {
     * ties break to the lower cluster index, and an emptied cluster
     * keeps its previous center (standard Lloyd's). ≤ 20 iterations or
     * assignment fixpoint, matching the MLlib defaults it replaces.
-    * Returns (row id, cluster) pairs in row-id order.
+    * Returns the centers of the final assignment pass: at the
+    * 20-iteration cap they differ from the centers one more update would
+    * give, and only they reproduce the final assignment.
     */
-  private def localKMeansLabels(
-      rows: Array[(Long, Array[Double])], k: Int, seed: Long): Array[(Long, Int)] = {
+  private def lloydCenters(
+      rows: Array[(Long, Array[Double])], k: Int, seed: Long): Array[Array[Double]] = {
     val sorted = rows.sortBy(_._1)
     val n = sorted.length
     val dim = sorted(0)._2.length
@@ -148,51 +185,58 @@ object WaferPipeline {
     while (init.length < k) init += init.head.clone() // < k distinct points
     val centers = init.toArray
     val assign = Array.fill(n)(-1)
-    var changed = true
     var iter = 0
-    while (changed && iter < 20) {
-      changed = false
+    var more = true
+    while (more) {
+      var changed = false
       var i = 0
       while (i < n) {
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var d = 0.0
-          var j = 0
-          while (j < dim) {
-            val t = sorted(i)._2(j) - centers(c)(j); d += t * t; j += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = nearestCenter(sorted(i)._2, centers)
         if (assign(i) != best) { changed = true; assign(i) = best }
         i += 1
       }
-      val sums = Array.fill(k, dim)(0.0)
-      val cnts = Array.fill(k)(0L)
-      var i2 = 0
-      while (i2 < n) {
-        val c = assign(i2); cnts(c) += 1
-        var j = 0
-        while (j < dim) { sums(c)(j) += sorted(i2)._2(j); j += 1 }
-        i2 += 1
-      }
-      var c2 = 0
-      while (c2 < k) {
-        if (cnts(c2) > 0) {
-          var j = 0
-          while (j < dim) { centers(c2)(j) = sums(c2)(j) / cnts(c2); j += 1 }
-        }
-        c2 += 1
-      }
       iter += 1
+      more = changed && iter < 20
+      if (more) {
+        val sums = Array.fill(k, dim)(0.0)
+        val cnts = Array.fill(k)(0L)
+        var i2 = 0
+        while (i2 < n) {
+          val c = assign(i2); cnts(c) += 1
+          var j = 0
+          while (j < dim) { sums(c)(j) += sorted(i2)._2(j); j += 1 }
+          i2 += 1
+        }
+        var c2 = 0
+        while (c2 < k) {
+          if (cnts(c2) > 0) {
+            var j = 0
+            while (j < dim) { centers(c2)(j) = sums(c2)(j) / cnts(c2); j += 1 }
+          }
+          c2 += 1
+        }
+      }
     }
-    sorted.indices.map(i => (sorted(i)._1, assign(i))).toArray
+    centers
   }
 
-  /** G1-G4: per-step K-Means over z-scored features, labels joined back
-    * by row id (the Spark replacement for pandas index write-back,
+  /** One step's fit as a row function: z-score the raw features with the
+    * fit set's population moments, then pick a cluster with the fit's
+    * own nearest-center function.
+    */
+  private final case class StepFit(
+      mean: Array[Double], sd: Array[Double], nearest: Array[Double] => Int) {
+    def predict(x: Array[Double]): Int = nearest(zscore(x, mean, sd))
+  }
+
+  /** `(x − mean) / sd` per feature: the same IEEE expression as the
+    * MLlib tier's z columns, so driver and executors agree bit for bit.
+    */
+  private def zscore(x: Array[Double], mean: Array[Double], sd: Array[Double]): Array[Double] =
+    Array.tabulate(x.length)(j => (x(j) - mean(j)) / sd(j))
+
+  /** G1-G4: per-step K-Means over z-scored features, labels written by
+    * one projection (the Spark replacement for pandas index write-back,
     * preprocessing.py:153-208).
     *
     * Parity decisions (SURVEY.md §7.4):
@@ -206,15 +250,21 @@ object WaferPipeline {
     *   - per-step subsets at or under
     *     `spark.graft.wafer.kmeansLocalLimit` (default 500k rows; 0
     *     disables) fit via a driver-side seeded Lloyd's over the
-    *     collected z-vectors ([[localKMeansLabels]]); the distributed
-    *     MLlib path is the shape past the limit.
+    *     collected rows, z-scored on the driver ([[lloydCenters]]); the
+    *     distributed MLlib path is the shape past the limit.
     *
     * Job structure: one grouped aggregate yields every step's row count
     * and moments, and the count picks the fit, so there is no probe job.
-    * All driver-local steps share one z-vector collect and are fitted
-    * in a plain loop; the local path's job count does not grow with the
-    * number of steps. Each MLlib step is its own cached fit. One left
-    * join by row id plus a `localCheckpoint` writes the labels back.
+    * All driver-local steps share one collect of (row id, step, raw
+    * features); z-scores and Lloyd's run on the driver, so the local
+    * path's job count does not grow with the number of steps. Each MLlib
+    * step is its own cached fit. Each fit becomes a [[StepFit]], and one
+    * `KMeans_Cluster` column applies it row by row: z from the row's own
+    * features, then the fit's nearest center (`model.predict` for MLlib
+    * steps). The column is null outside the fit set — rows that are not
+    * REAL, not in a fitted step, or have a null or NaN feature
+    * (`na.drop` semantics). The result is lazy: it is evaluated, with the
+    * rest of `df`, by whatever action reads it.
     */
   def runKMeansByStep(
       df: DataFrame,
@@ -226,35 +276,26 @@ object WaferPipeline {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val spark = df.sparkSession
-    import spark.implicits._
-    // the local Lloyd's seeds its init by row id, so the ids must come
-    // from this frame's own partitioning; cached because the moments,
-    // the fits and the write-back all read it
-    val withId = df.withColumn("__row_id", monotonically_increasing_id()).cache()
-    val subset = withId
-      .filter(col("IS_DEFECT") === "REAL" && col("Step_desc").isin(steps: _*))
-      .na.drop("any", features)
+    // na.drop("any", features): null, or NaN in a floating column
+    def fitSet(fitSteps: Seq[String]): Column =
+      features.foldLeft(col("IS_DEFECT") === "REAL" && col("Step_desc").isin(fitSteps: _*)) {
+        (acc, f) => acc && col(f).isNotNull && !isnan(col(f))
+      }
     // per step: row count, then (mean, mean of squares) per feature
-    val moments: Map[String, Row] = subset.groupBy("Step_desc")
+    val moments: Map[String, Row] = df.filter(fitSet(steps)).groupBy("Step_desc")
       .agg(count(lit(1)).as("__n"), features.flatMap(f => Seq(
         (Num.dsum(col(f)) / count(col(f))).as(s"__m_$f"),
         (Num.dsum(col(f) * col(f)) / count(col(f))).as(s"__msq_$f"))): _*)
       .collect().map(r => r.getString(0) -> r).toMap
-    // z-vectors of the given steps; each step's moments enter as
-    // literals, through the same expressions the aggregate's columns
-    // would, so the z-scores do not depend on how they are fetched
-    def scaled(fitSteps: Seq[String]): DataFrame = {
-      val zCols = features.zipWithIndex.map { case (f, j) =>
-        fitSteps.map { step =>
-          val m = lit(moments(step).getDouble(2 + 2 * j))
-          val sd = sqrt(lit(moments(step).getDouble(3 + 2 * j)) - m * m)
-          step -> (col(f) - m) / when(sd === 0.0 || sd.isNull, lit(1.0)).otherwise(sd)
-        }.foldLeft(lit(null).cast("double")) { case (acc, (step, z)) =>
-          when(col("Step_desc") === step, z).otherwise(acc)
-        }.as(s"__z_$f")
+    // (mean, population sd) per feature; a zero sd scales by 1
+    def scale(step: String): (Array[Double], Array[Double]) = {
+      val r = moments(step)
+      val mean = Array.tabulate(features.size)(j => r.getDouble(2 + 2 * j))
+      val sd = Array.tabulate(features.size) { j =>
+        val s = math.sqrt(r.getDouble(3 + 2 * j) - mean(j) * mean(j))
+        if (s == 0.0) 1.0 else s
       }
-      subset.filter(col("Step_desc").isin(fitSteps: _*))
-        .select((col("__row_id") +: col("Step_desc") +: zCols): _*)
+      (mean, sd)
     }
     val localLimit = spark.conf
       .get("spark.graft.wafer.kmeansLocalLimit", "500000").toLong
@@ -263,7 +304,7 @@ object WaferPipeline {
     // ~20 scheduled jobs whose wall is task-launch floors and
     // whose scheduling noise was the widest band in every driver
     // bench — while the same Lloyd's iterations over the collected
-    // z-vectors (≤ 500k × 18 doubles per step) are milliseconds of
+    // rows (≤ 500k × 18 doubles per step) are milliseconds of
     // driver compute, deterministic and partition-invariant by
     // construction (rows iterated in row-id order, seeded
     // hash-ranked init). Cluster ids are arbitrary under BOTH
@@ -272,22 +313,31 @@ object WaferPipeline {
     // shape, where per-step subsets are billions of rows.
     val (localSteps, mllibSteps) = steps.distinct.filter(moments.contains)
       .partition(step => localLimit > 0 && moments(step).getLong(1) <= localLimit)
-    val localLabels =
+    val localFits: Seq[(String, StepFit)] =
       if (localSteps.isEmpty) Nil
       else {
-        val byStep = scaled(localSteps).collect().groupBy(_.getString(1))
-        localSteps.flatMap { step =>
-          localKMeansLabels(byStep(step).map(r =>
-            (r.getLong(0), Array.tabulate(features.size)(j => r.getDouble(j + 2)))), k, seed)
+        // the local Lloyd's seeds its init by row id, so the ids are
+        // taken over df's own partitioning, before the filter
+        val byStep = df.withColumn("__row_id", monotonically_increasing_id())
+          .filter(fitSet(localSteps))
+          .select((col("__row_id") +: col("Step_desc") +: features.map(col)): _*)
+          .collect().groupBy(_.getString(1))
+        localSteps.map { step =>
+          val (mean, sd) = scale(step)
+          val centers = lloydCenters(byStep(step).map(r => (r.getLong(0),
+            zscore(Array.tabulate(features.size)(j => r.getDouble(j + 2)), mean, sd))), k, seed)
+          step -> StepFit(mean, sd, z => nearestCenter(z, centers))
         }
       }
-    def fitMllib(step: String): DataFrame = {
-      val z = scaled(Seq(step))
+    def fitMllib(step: String): (String, StepFit) = {
+      val (mean, sd) = scale(step)
       val cnt = moments(step).getLong(1)
+      val z = df.filter(fitSet(Seq(step))).select(array_to_vector(array(
+        features.zipWithIndex.map { case (f, j) => (col(f) - lit(mean(j))) / lit(sd(j)) }: _*))
+        .as("__fv"))
       // cache the z-scored vectors: the fit is iterative and would
       // otherwise re-evaluate the upstream plan once per pass
       val fitInput = z
-        .withColumn("__fv", array_to_vector(array(features.map(f => col(s"__z_$f")): _*)))
         // one partition per ~500k rows (floor 1): each iteration is
         // a handful of tasks, large subsets keep their parallelism
         .coalesce(math.max(1L, math.min(z.rdd.getNumPartitions.toLong, cnt / 500000L + 1)).toInt)
@@ -299,11 +349,9 @@ object WaferPipeline {
         // either way (correctness is structural, §5.3)
         val model = new KMeans()
           .setK(k).setSeed(seed).setInitMode("random")
-          .setFeaturesCol("__fv").setPredictionCol("__cluster")
+          .setFeaturesCol("__fv")
           .fit(fitInput)
-        model.transform(fitInput).select(col("__row_id"),
-          col("__cluster").cast(IntegerType).as("KMeans_Cluster"))
-          .localCheckpoint() // materialize so fit input can be freed
+        step -> StepFit(mean, sd, z => model.predict(Vectors.dense(z)))
       } finally fitInput.unpersist()
     }
     // MLlib steps are independent → fit them concurrently by default:
@@ -315,24 +363,19 @@ object WaferPipeline {
     // (fits are per-step independent).
     val concurrent = spark.conf
       .get("spark.graft.wafer.concurrentFits", "true").toBoolean
-    val mllibLabels =
+    val mllibFits =
       if (concurrent)
         Await.result(Future.sequence(mllibSteps.map(step => Future(fitMllib(step)))),
           Duration.Inf)
       else mllibSteps.map(fitMllib)
-    val labelParts =
-      (if (localLabels.isEmpty) Nil else Seq(localLabels.toDF("__row_id", "KMeans_Cluster"))) ++
-        mllibLabels
-    val out =
-      if (labelParts.isEmpty)
-        withId.withColumn("KMeans_Cluster", lit(null).cast(IntegerType))
-      else withId.join(labelParts.reduce(_ unionByName _), Seq("__row_id"), "left")
-    // materialize, then free the withId cache: the returned lazy plan
-    // references it, so without this every pipeline run in a session
-    // leaks a cached copy of the full input
-    val result = out.drop("__row_id").localCheckpoint()
-    withId.unpersist()
-    result
+    val fits = (localFits ++ mllibFits).toMap
+    val label =
+      if (fits.isEmpty) lit(null).cast(IntegerType)
+      else {
+        val predict = udf((step: String, x: Seq[Double]) => fits(step).predict(x.toArray))
+        when(fitSet(fits.keys.toSeq), predict(col("Step_desc"), array(features.map(col): _*)))
+      }
+    df.withColumn("KMeans_Cluster", label)
   }
 
   /** G5/F8: rule-based killer labeling — the reference's row loop folded

@@ -177,6 +177,38 @@ class WaferPipelineSpec extends SparkSpec {
     } finally deleteTree(dir)
   }
 
+  test("kmeans characterization: the MLlib tier's counts on a CSV round trip are pinned") {
+    // the same input as the local-tier pin, with kmeansLocalLimit=0 so
+    // every step takes the distributed MLlib fit; its random init samples
+    // the fit input in order, so a reordered or re-scaled input moves these
+    val dir = java.nio.file.Files.createTempDirectory("graft_kmeans_mllib_pin")
+    spark.conf.set("spark.graft.wafer.kmeansLocalLimit", "0")
+    try {
+      val in = dir.resolve("in").toString
+      WaferDataGen.generate(spark, 20000L, 42L).write.option("header", "true").csv(in)
+      val out = WaferPipeline.preprocess(WaferPipeline.loadCsv(spark, in)).cache()
+      val counts = out.filter(col("KMeans_Cluster").isNotNull)
+        .groupBy("Step_desc", "KMeans_Cluster").count().collect()
+        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+      val killers = out.filter(col("is_killer_defect")).count()
+      out.unpersist()
+      // pinned from the row-id join write-back this projection replaced
+      assert(counts === Map(("PC", 0) -> 590L, ("PC", 1) -> 585L, ("RMG", 0) -> 551L,
+        ("RMG", 1) -> 567L, ("CBCMP", 0) -> 608L, ("CBCMP", 1) -> 565L))
+      assert(killers === 1760L)
+    } finally {
+      spark.conf.unset("spark.graft.wafer.kmeansLocalLimit")
+      deleteTree(dir)
+    }
+  }
+
+  test("kmeans: the local tier runs at most four jobs") {
+    def jobs(): Int = JobCounter(spark.sparkContext)(WaferPipeline.runKMeansByStep(fixture))._2
+    jobs() // warm-up: fills the fixture cache
+    val n = jobs()
+    assert(n <= 4, s"runKMeansByStep ran $n jobs")
+  }
+
   test("kmeans: the local path's job count does not grow with the number of steps") {
     def jobs(steps: Seq[String]): Int =
       JobCounter(spark.sparkContext)(WaferPipeline.runKMeansByStep(fixture, steps))._2
@@ -290,6 +322,27 @@ class WaferPipelineSpec extends SparkSpec {
         WaferPipeline.loadCsv(spark, emptyDir.toString)
       }
     } finally deleteTree(emptyDir)
+  }
+
+  test("loadCsv reads its files once: the pipeline runs after the input is deleted") {
+    val root = java.nio.file.Files.createTempDirectory("graft_load_once")
+    try {
+      val in = root.resolve("in")
+      WaferDataGen.generate(spark, 3000L, 7L).write.option("header", "true").csv(in.toString)
+      def run(deleteInput: Boolean, out: String): (Long, Long) = {
+        val raw = WaferPipeline.loadCsv(spark, in.toString)
+        if (deleteInput) deleteTree(in)
+        val done = WaferPipeline.preprocess(raw)
+        WaferPipeline.writeCsv(done, out)
+        val s = WaferPipeline.summary(done)
+        (s.rows, s.killerCount)
+      }
+      val kept = run(deleteInput = false, root.resolve("kept").toString)
+      val deleted = run(deleteInput = true, root.resolve("deleted").toString)
+      assert(!java.nio.file.Files.exists(in))
+      assert(kept._1 > 0 && kept._2 > 0, s"$kept")
+      assert(deleted === kept)
+    } finally deleteTree(root)
   }
 
   test("schema validator flags missing and mismatched columns") {
