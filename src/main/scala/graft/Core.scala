@@ -371,6 +371,51 @@ object Num {
   /** Order-independent mean built from dsum / count. */
   def davg(c: Column): Column = (dsum(c) / count(c)).cast("double")
 
+  /** `dsum(x) / count(x)` over a non-empty array of values, computed on
+    * the driver and bit-identical to Spark's. Spark casts each double to
+    * DECIMAL(28,6) by rounding `Double.toString(x)` HALF_UP to 6 places,
+    * sums the decimals exactly and converts the sum with
+    * `java.math.BigDecimal.doubleValue`; this does the same.
+    *
+    * Fast path: a sum of longs in millionths. For |x| < 1e9 the product
+    * x·1e6 is an exact-integer-range double within 1.5 ulps of the
+    * decimal string's value (`Double.toString(x)` lies within ½ ulp of
+    * x), so outside 4 ulps of a .5 boundary both round to the same
+    * integer. A value inside that band or past 1e9 is rounded from its
+    * string with BigDecimal, as is the sum once the long would overflow.
+    *
+    * None when a value is NaN or ±Inf, or would overflow DECIMAL(28,6)
+    * (|x| ≥ 1e22): there the caller runs the aggregate, so Spark's own
+    * result or error stands.
+    */
+  def davgLocal(xs: Array[Double]): Option[Double] = {
+    require(xs.nonEmpty, "davgLocal needs at least one value")
+    var fast = 0L
+    var slow = java.math.BigDecimal.ZERO
+    var i = 0
+    while (i < xs.length) {
+      val x = xs(i)
+      val ax = math.abs(x)
+      if (!(ax < 1e22)) return None // NaN, ±Inf or a DECIMAL(28,6) overflow
+      val a = ax * 1e6
+      val whole = math.floor(a)
+      val frac = a - whole
+      if (ax < 1e9 && math.abs(frac - 0.5) > 4 * math.ulp(a)) {
+        val m = (if (frac > 0.5) whole + 1 else whole).toLong
+        val t = if (x < 0) -m else m
+        val next = fast + t
+        if (((fast ^ next) & (t ^ next)) < 0) { // long overflow
+          slow = slow.add(java.math.BigDecimal.valueOf(fast, 6))
+          fast = t
+        } else fast = next
+      } else
+        slow = slow.add(new java.math.BigDecimal(java.lang.Double.toString(x))
+          .setScale(6, java.math.RoundingMode.HALF_UP))
+      i += 1
+    }
+    Some(slow.add(java.math.BigDecimal.valueOf(fast, 6)).doubleValue / xs.length)
+  }
+
   /** SQL fragments mirroring dsum/davg for DuckDB oracle strings. */
   def dsumSql(x: String): String = s"CAST(SUM(CAST(($x) AS DECIMAL(28,6))) AS DOUBLE)"
   def davgSql(x: String): String = s"(${dsumSql(x)} / COUNT($x))"

@@ -32,40 +32,33 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructT
   * plans should cache or checkpoint the input, as
   * `graft.wafer.WaferPipeline.loadCsv` does with its parsed CSV, so the
   * passes read parsed rows. The exact strategy is SIZE-DISPATCHED
-  * three ways on one count probe: driver bounds replay under
-  * `spark.graft.iqr.localLimit` (100k), the value-buffering `percentile`
-  * aggregate up to `spark.graft.iqr.bufferedBoundsLimit` (50M), and
-  * ORDER STATISTICS over a scalable rank past it ([[sortedBounds]]:
-  * range-exchange sort + keyed aggs, bounded task memory at any group
-  * size — EXACT quantiles remain available at 100 TB, value buffering
-  * never OOMs an executor). The two limits are the only levers: with
-  * the probe opted out (localLimit <= 0) there is no count, and the
-  * buffered aggregate runs. All three are bit-identical by
-  * construction and A/B-spec'd. `exact=false` swaps to
-  * `approx_percentile` (t-digest, single pass, mergeable) when a
-  * bounded accuracy cost buys a one-pass plan.
+  * three ways: driver bounds replay under `spark.graft.iqr.localLimit`
+  * (100k), the value-buffering `percentile` aggregate up to
+  * `spark.graft.iqr.bufferedBoundsLimit` (50M), and ORDER STATISTICS
+  * over a scalable rank past it ([[sortedBounds]]: range-exchange sort
+  * + keyed aggs, bounded task memory at any group size — EXACT
+  * quantiles remain available at 100 TB, value buffering never OOMs an
+  * executor). The two limits are the only levers: with the local tier
+  * opted out (localLimit <= 0) nothing is counted, and the buffered
+  * aggregate runs. All three are bit-identical by construction and
+  * A/B-spec'd. `exact=false` swaps to `approx_percentile` (t-digest,
+  * single pass, mergeable) when a bounded accuracy cost buys a one-pass
+  * plan.
   *
-  * Small-input dispatch (the cc.localLimit discipline applied to the
-  * bounds computation): when the exact-quantile input fits under
-  * `spark.graft.iqr.localLimit` rows (default 100k; 0 or Int.MaxValue-ish
-  * disables), a column-pruned count sizes the input and a plain collect
-  * of the projected (groupCols, valueCols-as-double) columns fetches
-  * the data (count-then-fetch — see the probe comment for why a
-  * limit-pushed collect is the wrong probe at scale), the
-  * sequential per-pass bounds are replayed on the driver with
-  * BIT-IDENTICAL arithmetic to Spark's `Percentile` aggregate (same
-  * sorted-order-statistic interpolation formula, same
+  * Small-input dispatch: one [[LocalFetch]] job over the projected
+  * (groupCols, valueCols-as-double) columns returns the exact row count
+  * and, when it is at most `spark.graft.iqr.localLimit` rows, the rows
+  * themselves. The sequential per-pass bounds are then replayed on the
+  * driver with BIT-IDENTICAL arithmetic to Spark's `Percentile`
+  * aggregate (same sorted-order-statistic interpolation formula, same
   * `SQLOrderingUtil.compareDoubles` filter semantics — see
   * [[exactPercentile]]), and the result plan is ONE broadcast join plus
-  * one conjunctive filter with the literal bounds. The distributed path
-  * is N eager agg jobs, each re-executing the scan plus the prior pass
-  * chain — pure job-launch floors at these sizes, while the driver
-  * replay over ≤100k collected rows is milliseconds. Past the limit the
-  * probe falls through to the unchanged per-pass distributed plan (the
-  * probe itself is then just the count scan; sequential-filter
-  * algebra note: with FIXED per-pass bounds, applying the passes as one
-  * conjunction is exactly the sequential survivor set, because pass N
-  * only ever removes rows).
+  * one conjunctive filter with the literal bounds. Past the limit the
+  * fetch has shipped at most `localLimit` rows, and its count is the
+  * exact size the distributed passes use to pick buffered-vs-sort
+  * bounds. Sequential-filter algebra: with FIXED per-pass bounds,
+  * applying the passes as one conjunction is exactly the sequential
+  * survivor set, because pass N only ever removes rows.
   */
 object IqrOutlierFilter {
   def apply(
@@ -82,37 +75,34 @@ object IqrOutlierFilter {
         df.filter(groupCols.map(col(_).isNotNull)
           .reduceOption(_ && _).getOrElse(lit(true)))
       else df
-    // default 100k since round 14 (was 1M): the driver's r13 bench
-    // measured the ≤1M driver-replay tier SLOWER than the distributed
-    // buffered aggregate at sf0.1's 600k-row lineitem (q22 0.81 → 1.14 s
-    // — a count probe plus a full projection collect per execution vs
-    // one 32-way percentile agg), and the same-box r14 A/B agrees
-    // (local 1.02–1.15 vs probe+buffered 0.86–0.95 isolated warm). At
-    // 100k the replay keeps its real wins (the wafer pipeline's 64k-row
-    // IQR stages) and stops adding driver collects to inputs that are
-    // comfortably distributed work.
+    // The local tier's budget: the replay holds at most localLimit
+    // projected rows on the driver, and the fetch ships no more than
+    // that at any input size. Under it, the fetch's one job beats the
+    // distributed passes' N eager percentile jobs, each re-executing the
+    // scan and the prior passes; at 600k rows one parallel percentile
+    // aggregate beats shipping every row to the driver, so the budget
+    // stays well below that.
     val localLimit = df.sparkSession.conf
       .get("spark.graft.iqr.localLimit", "100000").toLong
     // approx mode never dispatches: replaying a t-digest sketch
     // bit-identically is not tractable, and approx IS the 100 TB path.
-    // An Int.MaxValue-ish limit routes distributed like the <=0 opt-out
-    // (the probe's limit must fit an Int) — the cc-dispatch discipline.
+    // A limit near Int.MaxValue is an opt-out like <= 0: the replay's
+    // row array must stay indexable.
     if (exact && valueCols.nonEmpty &&
         localLimit > 0 && localLimit < Int.MaxValue - 1) {
-      // COUNT-then-fetch probe (not a limit-pushed collect: CollectLimit
-      // probes partitions in sequential scale-up waves and ships every
-      // scanned row to the driver — measured 10× q22, the waves shipped
-      // ~3M rows across serial jobs just to learn "over limit"). The
-      // column-pruned count moves no rows at any scale — and past the
-      // dispatch limit it is ALSO the exact-strategy size signal
-      // (knownCount) the distributed pass uses to pick buffered-vs-sort
-      // bounds, so the probe is never wasted work.
-      val n = cur.select((groupCols ++ valueCols).map(col): _*).count()
-      if (n <= localLimit)
-        localBoundsPlan(df, cur, groupCols, valueCols, k, dropNullKeys)
-      else
-        distributedPasses(df, cur, groupCols, valueCols, k, dropNullKeys,
-          exact, knownCount = Some(n))
+      // Values are cast to double in the fetch: Spark's Percentile
+      // converts each buffered key with toDoubleValue before
+      // interpolating, and the distributed filter's `value <= __ub`
+      // promotes the value to double — the same arithmetic, one
+      // conversion earlier.
+      val fetchCols = groupCols.map(col) ++ valueCols.map(c => col(c).cast("double"))
+      LocalFetch(cur.select(fetchCols: _*), localLimit) match {
+        case (_, Some(rows)) =>
+          localBoundsPlan(df, cur, rows, groupCols, valueCols, k, dropNullKeys)
+        case (n, None) =>
+          distributedPasses(df, cur, groupCols, valueCols, k, dropNullKeys,
+            exact, knownCount = Some(n))
+      }
     } else
       distributedPasses(df, cur, groupCols, valueCols, k, dropNullKeys,
         exact, knownCount = None)
@@ -142,7 +132,7 @@ object IqrOutlierFilter {
     // all-one-group input stays comfortably under executor heap) the
     // bounds come from order statistics over a scalable rank
     // ([[sortedBounds]]): bounded task memory at ANY group size, the
-    // exact form's 100 TB shape. Without a probe count (dispatch opted
+    // exact form's 100 TB shape. Without a fetch count (dispatch opted
     // out) the buffered aggregate runs.
     val bufferedLimit = df.sparkSession.conf
       .get("spark.graft.iqr.bufferedBoundsLimit", "50000000").toLong
@@ -186,28 +176,18 @@ object IqrOutlierFilter {
     cur.select(df.columns.map(col).toIndexedSeq: _*) // using-column joins move keys first; restore input order
   }
 
-  /** Driver-side sequential bounds replay over an input the caller has
-    * already count-probed under the dispatch limit. The fetch is a
-    * plain parallel collect (no limit node, no CollectLimit waves);
-    * together with the caller's count, the under-limit path executes
-    * the upstream twice — callers with expensive upstream plans should
-    * cache or checkpoint the input, as the object scaladoc directs.
+  /** Driver-side sequential bounds replay over `sample`, the rows of
+    * `cur` projected to (groupCols, valueCols as double).
     */
   private def localBoundsPlan(
       df: DataFrame,
       cur: DataFrame,
+      sample: Array[Row],
       groupCols: Seq[String],
       valueCols: Seq[String],
       k: Double,
       dropNullKeys: Boolean): DataFrame = {
     val gArity = groupCols.length
-    // Values are cast to double UP FRONT: Spark's Percentile converts
-    // each buffered key with toDoubleValue before interpolating, and the
-    // distributed filter's `value <= __ub` promotes the value to double —
-    // casting at the probe is the same arithmetic, one conversion earlier.
-    val probeCols = groupCols.map(col) ++ valueCols.map(c => col(c).cast("double"))
-    val sample = cur.select(probeCols: _*).collect()
-
     def keyOf(r: Row): List[Any] = List.tabulate(gArity)(r.get)
     // Per pass, per pass-start group: (skip, ub). skip folds the
     // cnt<2 / IQR==0 guards with the exact double arithmetic the

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Num
-import graft.operators.IqrOutlierFilter
+import graft.operators.{IqrOutlierFilter, LocalFetch}
 
 /** The wafer-defect pipeline, Spark-first: lazy DataFrame→DataFrame
   * stages replacing the reference's eager pandas copies
@@ -34,10 +34,13 @@ import graft.operators.IqrOutlierFilter
   * The eager work inside the stages is:
   *   - loadCsv: one job that parses the input into the checkpoint and
   *     counts it for the empty-input check;
-  *   - the outlier stage's per-group quantile bounds (tiny collects);
-  *   - runKMeansByStep: one per-step moments aggregate and the fit (one
-  *     collect of raw features for the driver-local steps, a cached MLlib
-  *     fit per step past the limit); the labels are a lazy projection;
+  *   - removeOutliersByClass: under `spark.graft.iqr.localLimit`, one
+  *     bounded fetch of the projected input, then the bounds on the
+  *     driver; past it, one quantile aggregate per size column;
+  *   - runKMeansByStep: under `spark.graft.wafer.kmeansLocalLimit`, one
+  *     bounded fetch of the fit set, then moments and Lloyd's on the
+  *     driver; past it, a moments aggregate and the per-step fits; the
+  *     labels are a lazy projection;
   *   - summary and writeCsv, which are actions by definition.
   */
 object WaferPipeline {
@@ -220,6 +223,19 @@ object WaferPipeline {
     centers
   }
 
+  /** One step's fit-set size and, per feature, the population mean and
+    * mean of squares — the aggregate `Num.dsum(x) / count(x)` and
+    * `Num.dsum(x * x) / count(x)`, or their exact driver replay.
+    */
+  private final case class Moments(n: Long, mean: Array[Double], meanSq: Array[Double]) {
+    /** (mean, population sd) per feature; a zero sd scales by 1. */
+    def scale: (Array[Double], Array[Double]) =
+      (mean, Array.tabulate(mean.length) { j =>
+        val s = math.sqrt(meanSq(j) - mean(j) * mean(j))
+        if (s == 0.0) 1.0 else s
+      })
+  }
+
   /** One step's fit as a row function: z-score the raw features with the
     * fit set's population moments, then pick a cluster with the fit's
     * own nearest-center function.
@@ -253,18 +269,27 @@ object WaferPipeline {
     *     collected rows, z-scored on the driver ([[lloydCenters]]); the
     *     distributed MLlib path is the shape past the limit.
     *
-    * Job structure: one grouped aggregate yields every step's row count
-    * and moments, and the count picks the fit, so there is no probe job.
-    * All driver-local steps share one collect of (row id, step, raw
-    * features); z-scores and Lloyd's run on the driver, so the local
-    * path's job count does not grow with the number of steps. Each MLlib
-    * step is its own cached fit. Each fit becomes a [[StepFit]], and one
-    * `KMeans_Cluster` column applies it row by row: z from the row's own
-    * features, then the fit's nearest center (`model.predict` for MLlib
-    * steps). The column is null outside the fit set — rows that are not
-    * REAL, not in a fitted step, or have a null or NaN feature
-    * (`na.drop` semantics). The result is lazy: it is evaluated, with the
-    * rest of `df`, by whatever action reads it.
+    * Job structure: one [[graft.operators.LocalFetch]] job counts the
+    * fit set and, when the whole set is within the limit (so every step
+    * is), returns its (row id, step, raw features). Each step's moments
+    * are then replayed on the driver with [[graft.Num.davgLocal]],
+    * bit-identical to the aggregate, and z-scores and Lloyd's follow on
+    * the same rows: no further job, whatever the number of steps. Past
+    * the limit one grouped aggregate yields every step's row count and
+    * moments, and the count picks each step's fit: the driver-local
+    * steps share one collect, and each MLlib step is its own cached fit.
+    * At that scale the fetch is one extra counting scan, which ships at
+    * most the limit's worth of rows. A value the decimal moments cannot
+    * hold (±Inf, or past DECIMAL(28,6)) also sends the moments to the
+    * aggregate, so Spark's own result or error stands.
+    *
+    * Each fit becomes a [[StepFit]], and one `KMeans_Cluster` column
+    * applies it row by row: z from the row's own features, then the
+    * fit's nearest center (`model.predict` for MLlib steps). The column
+    * is null outside the fit set — rows that are not REAL, not in a
+    * fitted step, or have a null or NaN feature (`na.drop` semantics).
+    * The result is lazy: it is evaluated, with the rest of `df`, by
+    * whatever action reads it.
     */
   def runKMeansByStep(
       df: DataFrame,
@@ -281,24 +306,46 @@ object WaferPipeline {
       features.foldLeft(col("IS_DEFECT") === "REAL" && col("Step_desc").isin(fitSteps: _*)) {
         (acc, f) => acc && col(f).isNotNull && !isnan(col(f))
       }
-    // per step: row count, then (mean, mean of squares) per feature
-    val moments: Map[String, Row] = df.filter(fitSet(steps)).groupBy("Step_desc")
-      .agg(count(lit(1)).as("__n"), features.flatMap(f => Seq(
-        (Num.dsum(col(f)) / count(col(f))).as(s"__m_$f"),
-        (Num.dsum(col(f) * col(f)) / count(col(f))).as(s"__msq_$f"))): _*)
-      .collect().map(r => r.getString(0) -> r).toMap
-    // (mean, population sd) per feature; a zero sd scales by 1
-    def scale(step: String): (Array[Double], Array[Double]) = {
-      val r = moments(step)
-      val mean = Array.tabulate(features.size)(j => r.getDouble(2 + 2 * j))
-      val sd = Array.tabulate(features.size) { j =>
-        val s = math.sqrt(r.getDouble(3 + 2 * j) - mean(j) * mean(j))
-        if (s == 0.0) 1.0 else s
+    // (row id, step, raw features) of the fit set; the local Lloyd's
+    // seeds its init by row id, so the ids are taken over df's own
+    // partitioning, before the filter
+    def fitRows(fitSteps: Seq[String]): DataFrame =
+      df.withColumn("__row_id", monotonically_increasing_id())
+        .filter(fitSet(fitSteps))
+        .select((col("__row_id") +: col("Step_desc") +: features.map(col)): _*)
+    // per step: (row id, raw features) of each fit-set row
+    def byStep(rows: Array[Row]): Map[String, Array[(Long, Array[Double])]] =
+      rows.groupBy(_.getString(1)).map { case (step, rs) =>
+        step -> rs.map(r => (r.getLong(0), Array.tabulate(features.size)(j => r.getDouble(j + 2))))
       }
-      (mean, sd)
-    }
     val localLimit = spark.conf
       .get("spark.graft.wafer.kmeansLocalLimit", "500000").toLong
+    // the whole fit set, when it fits under the limit (then so does each step)
+    val fetched = if (localLimit > 0) LocalFetch(fitRows(steps), localLimit)._2.map(byStep) else None
+    // a step's moments replayed exactly on the driver; None when a
+    // value is one that Num.davgLocal leaves to the aggregate
+    def replay(points: Array[(Long, Array[Double])]): Option[Moments] = {
+      val cols = Array.tabulate(features.size)(j => points.map(_._2(j)))
+      val mean = cols.map(Num.davgLocal)
+      val meanSq = cols.map(c => Num.davgLocal(c.map(v => v * v)))
+      if ((mean ++ meanSq).forall(_.isDefined))
+        Some(Moments(points.length.toLong, mean.map(_.get), meanSq.map(_.get)))
+      else None
+    }
+    val replayed: Option[Map[String, Moments]] = fetched.flatMap { points =>
+      val m = points.map { case (step, ps) => step -> replay(ps) }
+      if (m.values.forall(_.isDefined)) Some(m.map { case (step, o) => step -> o.get }) else None
+    }
+    // otherwise one aggregate: per step, row count, then (mean, mean of
+    // squares) per feature
+    val moments: Map[String, Moments] = replayed.getOrElse(
+      df.filter(fitSet(steps)).groupBy("Step_desc")
+        .agg(count(lit(1)).as("__n"), features.flatMap(f => Seq(
+          (Num.dsum(col(f)) / count(col(f))).as(s"__m_$f"),
+          (Num.dsum(col(f) * col(f)) / count(col(f))).as(s"__msq_$f"))): _*)
+        .collect().map(r => r.getString(0) -> Moments(r.getLong(1),
+          Array.tabulate(features.size)(j => r.getDouble(2 + 2 * j)),
+          Array.tabulate(features.size)(j => r.getDouble(3 + 2 * j)))).toMap)
     // Small-subset dispatch (the cc.localLimit discipline, applied
     // to the fit): an MLlib fit on a per-step subset this size is
     // ~20 scheduled jobs whose wall is task-launch floors and
@@ -312,26 +359,21 @@ object WaferPipeline {
     // distributed MLlib path below runs unchanged — the 100 TB
     // shape, where per-step subsets are billions of rows.
     val (localSteps, mllibSteps) = steps.distinct.filter(moments.contains)
-      .partition(step => localLimit > 0 && moments(step).getLong(1) <= localLimit)
+      .partition(step => localLimit > 0 && moments(step).n <= localLimit)
     val localFits: Seq[(String, StepFit)] =
       if (localSteps.isEmpty) Nil
       else {
-        // the local Lloyd's seeds its init by row id, so the ids are
-        // taken over df's own partitioning, before the filter
-        val byStep = df.withColumn("__row_id", monotonically_increasing_id())
-          .filter(fitSet(localSteps))
-          .select((col("__row_id") +: col("Step_desc") +: features.map(col)): _*)
-          .collect().groupBy(_.getString(1))
+        val points = fetched.getOrElse(byStep(fitRows(localSteps).collect()))
         localSteps.map { step =>
-          val (mean, sd) = scale(step)
-          val centers = lloydCenters(byStep(step).map(r => (r.getLong(0),
-            zscore(Array.tabulate(features.size)(j => r.getDouble(j + 2)), mean, sd))), k, seed)
+          val (mean, sd) = moments(step).scale
+          val centers = lloydCenters(
+            points(step).map { case (id, x) => (id, zscore(x, mean, sd)) }, k, seed)
           step -> StepFit(mean, sd, z => nearestCenter(z, centers))
         }
       }
     def fitMllib(step: String): (String, StepFit) = {
-      val (mean, sd) = scale(step)
-      val cnt = moments(step).getLong(1)
+      val (mean, sd) = moments(step).scale
+      val cnt = moments(step).n
       val z = df.filter(fitSet(Seq(step))).select(array_to_vector(array(
         features.zipWithIndex.map { case (f, j) => (col(f) - lit(mean(j))) / lit(sd(j)) }: _*))
         .as("__fv"))
@@ -392,8 +434,8 @@ object WaferPipeline {
     df.withColumn("is_killer_defect", flag)
   }
 
-  /** G6: togglable 4-stage composer (preprocessing.py:245-283). */
-  /** exactQuantiles=false switches the outlier stage to t-digest
+  /** G6: togglable 4-stage composer (preprocessing.py:245-283).
+    * exactQuantiles=false switches the outlier stage to t-digest
     * approx_percentile — the 100 TB path: single-pass, mergeable,
     * bounded memory, vs exact percentile which buffers every group
     * value (measured 55s of a 68s run at 6.4M rows, <2s approx).

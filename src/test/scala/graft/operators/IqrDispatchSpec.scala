@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -110,6 +111,17 @@ class IqrDispatchSpec extends SparkSpec {
       IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2")))
     assert(canon(local.collect()) === canon(dist.collect()))
     assert(local.filter(col("c1") === 1000.0).count() === 0)
+  }
+
+  test("building the local tier on a balanced input launches one job") {
+    val df = randomFrame(16).repartition(4).cache()
+    try {
+      df.count()
+      val (out, jobs) = JobCounter(spark.sparkContext)(
+        withLimit("100000")(IqrOutlierFilter(df, Seq("g"), Seq("c1", "c2"))))
+      assert(jobs === 1, s"$jobs jobs")
+      assert(joinCount(out) === 1, "the driver replay ran")
+    } finally df.unpersist()
   }
 
   test("over-limit probe falls through to the distributed plan") {

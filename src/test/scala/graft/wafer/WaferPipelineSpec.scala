@@ -202,11 +202,42 @@ class WaferPipelineSpec extends SparkSpec {
     }
   }
 
-  test("kmeans: the local tier runs at most four jobs") {
+  test("kmeans: the local tier runs at most two jobs") {
     def jobs(): Int = JobCounter(spark.sparkContext)(WaferPipeline.runKMeansByStep(fixture))._2
     jobs() // warm-up: fills the fixture cache
     val n = jobs()
-    assert(n <= 4, s"runKMeansByStep ran $n jobs")
+    assert(n <= 2, s"runKMeansByStep ran $n jobs")
+  }
+
+  test("kmeans: a limit under the fit set but over every step gives the replay's labels") {
+    // past the limit the moments come from the Spark aggregate and each
+    // step is still local; under it they are replayed on the driver, so
+    // equal labels mean the replay's z-scores equal the aggregate's
+    val dir = java.nio.file.Files.createTempDirectory("graft_kmeans_mixed")
+    try {
+      val in = dir.resolve("in").toString
+      WaferDataGen.generate(spark, 20000L, 42L).write.option("header", "true").csv(in)
+      val input = WaferPipeline.addEngineeredFeatures(
+        WaferPipeline.removeOutliersByClass(WaferPipeline.loadCsv(spark, in))).cache()
+      val fit = input.filter(col("IS_DEFECT") === "REAL" &&
+          col("Step_desc").isin(WaferSchema.defaultSteps: _*))
+        .na.drop("any", WaferSchema.clusterFeatures)
+      val total = fit.count()
+      val largest = fit.groupBy("Step_desc").count().agg(max("count")).head.getLong(0)
+      assert(largest < total)
+      def run(): (Seq[String], Int) = {
+        val (out, jobs) = JobCounter(spark.sparkContext)(WaferPipeline.runKMeansByStep(input))
+        (out.collect().map(_.toString).sorted.toSeq, jobs)
+      }
+      val (replayed, replayJobs) = run()
+      spark.conf.set("spark.graft.wafer.kmeansLocalLimit", largest.toString)
+      val (aggregated, aggregateJobs) = try run()
+        finally spark.conf.unset("spark.graft.wafer.kmeansLocalLimit")
+      assert(aggregateJobs > replayJobs, s"aggregate path $aggregateJobs jobs, replay $replayJobs")
+      assert(replayed.count(_.endsWith(",null]")) < replayed.size)
+      assert(aggregated === replayed)
+      input.unpersist()
+    } finally deleteTree(dir)
   }
 
   test("kmeans: the local path's job count does not grow with the number of steps") {
