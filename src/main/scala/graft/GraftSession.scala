@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session builder of the local dev and verification mains
   * (`Verify`, `tools.BenchOne`, `tools.PlanAudit`, `tools.PlanDump`,
-  * `tools.ScaleCheck`, `tools.TopKCompare`).
+  * `tools.ScaleCheck`).
   *
   * Two entry points keep their own builder: `Bench`, whose measurement
   * harness is frozen, and `wafer.WaferMain`, the user-facing pipeline,

@@ -18,18 +18,16 @@ object Dedup {
       .agg(min(idCol).as(s"keeper_$idCol"), count(lit(1)).as("n_copies"))
 
   /** Pair-count ceiling below which connected components run as
-    * driver-side union-find over the COLLECTED pair list instead of
+    * driver-side union-find over the fetched pair list instead of
     * distributed label rounds (overridable via conf
-    * `spark.graft.cc.localLimit`). Rationale (round-12 profile): the
-    * near-dup pair graph of a deduplicated corpus is the CLUSTER
-    * structure, not the corpus — q350's sf0.1 graph is 339 pairs / 625
-    * nodes, and the distributed star contraction spent 3.2 s of the
-    * query's 3.8 s launching ~20 rounds of joins + except-probes over
-    * it. 500k pairs collect to ~8 MB and union-find in milliseconds;
-    * past the limit the O(log n)-round star plan takes over (the
-    * 100 TB shape). The probe is one limit-pushed collect — when the
-    * graph IS small, the probe already fetched it, so nothing runs
-    * twice.
+    * `spark.graft.cc.localLimit`). The near-dup pair graph of a
+    * deduplicated corpus is the cluster structure, not the corpus:
+    * q350's sf0.1 graph is 339 pairs over 625 nodes, where the
+    * distributed star contraction spent 3.2 s of the query's 3.8 s
+    * launching ~20 rounds of joins and probes. 500k pairs are a few MB
+    * on the driver and union-find in milliseconds; past the limit the
+    * O(log n)-round star plan takes over. Sizing and fetching are one
+    * [[LocalFetch]] job, so a small graph is read once.
     */
   val defaultCcLocalLimit: Long = 500000L
 
@@ -72,23 +70,23 @@ object Dedup {
     label.toSeq.sorted.toDF("node", "cluster_id")
   }
 
-  /** Shared small-graph dispatch for both CC variants. Returns
-    * Right(result) when the pair list fits under the local ceiling
-    * (driver union-find over the collected rows), Left(pairs) when the
-    * caller's distributed plan should run — the Left frame has columns
-    * (u, v) long-typed and null-free, and when the probe ran it is a
-    * CHECKPOINTED materialization, so the over-limit fallback reuses
-    * the probe's rows instead of recomputing the (possibly expensive —
-    * LSH self-join) upstream pipeline a second time (round-12
-    * advisory). Three more hardenings from the same advisory batch:
-    * null pair ids are filtered here (matching the distributed plans,
-    * where a null key never joins — the driver path would otherwise
-    * NPE on getLong), limits at or above Int.MaxValue-1 route to the
-    * distributed path (the Int-typed probe could never detect
-    * truncation past that, and a >2G-pair driver union-find is not a
-    * sane configuration), and the limit<=0 opt-out returns a LAZY
-    * frame, so explain-only plan construction runs no jobs when local
-    * dispatch is disabled.
+  /** Shared small-graph dispatch for both CC variants, over the
+    * projection (u, v): both long-typed, rows with a null id dropped (a
+    * null key never joins in the distributed plans, so both tiers see
+    * the same graph).
+    *
+    * Budget: at most `spark.graft.cc.localLimit` pairs reach the
+    * driver. A limit <= 0 or at or above Int.MaxValue - 1 opts out and
+    * returns the projection lazily, so building the plan runs no job;
+    * a limit that high would ask for a driver union-find over more
+    * pairs than an array can index.
+    *
+    * Otherwise one [[LocalFetch]] over the lazily checkpointed
+    * projection both sizes it and fills the checkpoint. Right(result)
+    * is the union-find over the fetched pairs. Left(pairs) is that
+    * filled checkpoint as a fresh leaf with default statistics (the
+    * [[graft.Iterate.ckpt]] shape), so the distributed plan reads the
+    * materialized pairs instead of re-running the upstream pipeline.
     */
   private def componentsDispatch(
       pairs: DataFrame, aCol: String, bCol: String): Either[DataFrame, DataFrame] = {
@@ -99,11 +97,12 @@ object Dedup {
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull)
     if (limit <= 0 || limit >= Int.MaxValue - 1L) return Left(proj)
-    val mat = graft.Iterate.ckpt(proj)
-    val probe = mat.limit(limit.toInt + 1).collect()
-    if (probe.length > limit) Left(mat)
-    else Right(localComponents(spark,
-      probe.map(r => (r.getLong(0), r.getLong(1)))))
+    val mat = proj.localCheckpoint(eager = false)
+    LocalFetch(mat, limit)._2 match {
+      case Some(rows) =>
+        Right(localComponents(spark, rows.map(r => (r.getLong(0), r.getLong(1)))))
+      case None => Left(spark.createDataFrame(mat.rdd, mat.schema))
+    }
   }
 
   /** Per-document MinHash-LSH band keys over word-3-gram shingles:
@@ -284,6 +283,16 @@ object Dedup {
     * one join per round vs star's two of each) as the explicit option
     * for graphs KNOWN shallow, where its ~2 rounds are cheaper than
     * star's fixed ~log n.
+    *
+    * Why both distributed variants stay: each bounds a different
+    * graph shape. Forced distributed (`spark.graft.cc.localLimit=0`)
+    * on 4 cores over the LSH pair graph, six calls per figure,
+    * propagation is the faster one: 0.47-0.96 s per call against
+    * star's 1.45-2.11 s at sf0.01 (49 nodes), 0.66-0.89 s against
+    * 2.70-3.61 s at sf0.1 (625 nodes). Star's O(log n) rounds win only
+    * on deep chains, where propagation pays one shuffle per hop (the
+    * 10k-node path spec), and that worst case is why star is the
+    * default here.
     */
   def dedupe(
       df: DataFrame, idCol: String, textCol: String,
@@ -332,7 +341,7 @@ object Dedup {
     */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 25): DataFrame = {
-    // small-graph dispatch (round 12): see defaultCcLocalLimit
+    // small-graph dispatch: see defaultCcLocalLimit
     val proj = componentsDispatch(pairs, aCol, bCol) match {
       case Right(r) => return r
       case Left(p) => p
@@ -437,7 +446,7 @@ object Dedup {
   private[graft] def connectedComponentsStarCounted(
       pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 20)
       : (DataFrame, Int, Seq[Long]) = {
-    // small-graph dispatch (round 12): see defaultCcLocalLimit
+    // small-graph dispatch: see defaultCcLocalLimit
     val proj = componentsDispatch(pairs, aCol, bCol) match {
       case Right(r) => return (r, 0, Seq.empty)
       case Left(p) => p

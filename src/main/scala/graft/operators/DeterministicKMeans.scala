@@ -74,8 +74,10 @@ object DeterministicKMeans {
     }
 
   /** Shared Lloyd's driver: fits the centroids, then hands the caller
-    * the cached micro-unit frame plus the final assignment column to
-    * shape the output; the result is localCheckpoint'd so caches free.
+    * the micro-unit frame plus the final assignment column to shape the
+    * output. The result reads no cache: the distributed tier's is
+    * localCheckpoint'd so the cache can be freed, and the local tier's
+    * is built from driver rows.
     */
   private def run(
       df: DataFrame, idCol: String, vecCol: String,
@@ -90,27 +92,21 @@ object DeterministicKMeans {
         .as("__v6"))
       .cache()
     try {
-      val n = cached.count() // also materializes the cache eagerly
-
-      // Small-input dispatch (the cc.localLimit discipline): at or
-      // under `spark.graft.kmeans.localLimit` rows (default 200k —
-      // ≤ ~100 MB of micro-vectors at dim 64) the fit runs as a DRIVER
-      // replay of the identical algorithm over the collected
-      // micro-vectors. Every number in this operator is exact 64-bit
-      // integer arithmetic with pinned tie rules, so the replay is
-      // BIT-IDENTICAL to the distributed rounds by construction (the
-      // dispatch-equality spec asserts it) — which is what makes the
-      // dispatch safe under the SQL hash oracle. Each distributed
-      // round is a full aggregation job + collect; on a fit set this
-      // size that is pure job-launch overhead, and the ANN family
-      // (IVF coarse + 4 PQ subspaces) pays it once per fit. Past the
-      // limit the distributed rounds below run unchanged — the 100 TB
-      // shape (centroids stay driver-size in both).
+      // Small-input dispatch. Budget: at most
+      // `spark.graft.kmeans.localLimit` rows (default 200k, <= ~100 MB
+      // of micro-vectors at dim 64) reach the driver; <= 0 opts out.
+      // One LocalFetch job counts the input, fills the cache the
+      // distributed rounds read, and under the limit returns the rows.
+      // Each distributed round is an aggregation job plus a collect,
+      // pure launch overhead at this size. The driver replay runs the
+      // identical exact-integer algorithm with the same tie rules, so
+      // its result is bit-identical to the distributed rounds (the
+      // dispatch-equality spec asserts it).
       val localLimit = df.sparkSession.conf
         .get("spark.graft.kmeans.localLimit", "200000").toLong
-      if (localLimit > 0 && n <= localLimit) {
-        val rows = cached.select(col("__id"), col("__v6")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      val (n, fetched) = LocalFetch(cached, localLimit)
+      if (localLimit > 0 && fetched.isDefined) {
+        val rows = fetched.get.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
         require(rows.nonEmpty, "k-means on an empty input")
         def hash60local(id: Long): Long = {
           val hex = java.security.MessageDigest.getInstance("MD5")
@@ -163,7 +159,7 @@ object DeterministicKMeans {
         val labeled = rows.map { case (id, v) => (id, assignOf(v, cents).toLong) }
         import df.sparkSession.implicits._
         val base2 = labeled.toSeq.toDF("__id", "__cluster")
-        return finish(base2, col("__cluster"), cents).localCheckpoint()
+        return finish(base2, col("__cluster"), cents)
       }
 
       // size-aware parallelism: each round is a full aggregation job, so

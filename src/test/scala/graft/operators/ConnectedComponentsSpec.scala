@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -118,8 +119,8 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("pair graphs past the local limit route distributed and stay correct") {
-    // force the ceiling BELOW the graph size: the limit-probe must
-    // detect truncation and fall through to the distributed plan
+    // force the ceiling BELOW the graph size: the fetch must see the
+    // count over the limit and fall through to the distributed plan
     val chain = (1L to 50L).map(i => (i, i + 1))
     spark.conf.set("spark.graft.cc.localLimit", "10")
     try {
@@ -207,9 +208,8 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("localLimit at or above Int.MaxValue-1 routes distributed (truncation check would be blind)") {
-    // an Int-bounded probe can never observe more than Int.MaxValue-1
-    // rows, so a limit configured that high must opt out of the local
-    // path rather than trust an un-checkable collect
+    // a limit that high would ask for a driver union-find over more
+    // pairs than an array can index, so it opts out of the local path
     spark.conf.set("spark.graft.cc.localLimit", Long.MaxValue.toString)
     try {
       val got = starComponents(Seq((1L, 2L), (2L, 3L), (5L, 6L)))
@@ -224,5 +224,14 @@ class ConnectedComponentsSpec extends SparkSpec {
       pairs.toDF("a", "b").repartition(7, col("b")), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a === b)
+  }
+
+  test("building star components on the local tier launches one job") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
+    val (out, jobs) = JobCounter(spark.sparkContext)(
+      Dedup.connectedComponentsStar(pairs, "a", "b"))
+    assert(jobs === 1, s"$jobs jobs")
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 }

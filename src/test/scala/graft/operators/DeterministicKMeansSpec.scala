@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -80,5 +81,12 @@ class DeterministicKMeansSpec extends SparkSpec {
     assert(out.map(_.getLong(1)).sum === 80L)
     assert(out.map(_.getLong(2)).sum === (0L until 80L).sum)
     assert(out.map(_.getLong(0)).distinct.length === out.length)
+  }
+
+  test("building clusterSizes on the local tier launches at most two jobs") {
+    val (out, jobs) = JobCounter(spark.sparkContext)(
+      DeterministicKMeans.clusterSizes(blobs, "vec_id", "embedding", k = 2, iters = 5))
+    assert(jobs <= 2, s"$jobs jobs")
+    assert(out.collect().map(_.getLong(1)).sorted.toSeq === Seq(40L, 40L))
   }
 }

@@ -79,4 +79,27 @@ class LocalFetchSpec extends SparkSpec {
         (0 until 40).map(i => (i, i * 2.0)).toSet)
     } finally df.unpersist()
   }
+
+  test("one fetch fills a cached or lazily checkpointed frame: a second reads no files") {
+    val rows = (0 until 30).map(i => (i.toLong, s"r$i"))
+    val keeps = Seq[(String, DataFrame => DataFrame)](
+      "cache" -> (_.cache()), "localCheckpoint" -> (_.localCheckpoint(eager = false)))
+    for ((name, keep) <- keeps) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_fetch")
+      val path = dir.resolve("t").toString
+      rows.toDF("id", "label").repartition(3).write.parquet(path)
+      val df = keep(spark.read.parquet(path))
+      try {
+        val (n1, r1) = LocalFetch(df, 100)
+        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+        val (n2, r2) = LocalFetch(df, 100)
+        assert(n1 === 30 && n2 === 30, name)
+        assert(r1.get.map(r => (r.getLong(0), r.getString(1))).toSet === rows.toSet, name)
+        assert(r2.get.toSeq === r1.get.toSeq, name)
+      } finally {
+        df.unpersist()
+        org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+      }
+    }
+  }
 }
