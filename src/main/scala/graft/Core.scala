@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** One declared engine capability: a Spark implementation plus (when the
   * semantics are SQL-expressible) an equivalent ANSI SQL string the driver
@@ -21,11 +21,56 @@ final case class QueryDef(
   * All inputs are parquet; filters/projections declared downstream are
   * pushed into the scan by Catalyst (verify via .explain: PushedFilters /
   * ReadSchema).
+  *
+  * Each table's schema is inferred once per signature and every read
+  * passes it to `spark.read.schema`: an inferring `spark.read.parquet`
+  * runs a footer-reading Spark job on every call, even for a table read
+  * a moment ago. The signature is every leaf file's (path, length,
+  * modification time) plus the session's parquet reader confs, so a
+  * table regenerated in place, or a flipped `binaryAsString` /
+  * `nanosAsLong`, is inferred afresh. One entry per path; a changed
+  * signature replaces it.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  private type Signature = (Seq[(String, Long, Long)], Map[String, String])
+  private final case class Inferred(signature: Signature, schema: StructType)
+  private val inferred = new java.util.concurrent.ConcurrentHashMap[String, Inferred]()
+
+  private def signature(spark: SparkSession, path: String): Signature = {
+    import org.apache.hadoop.fs.FileStatus
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a LocatedFileStatus copies each local
+    // file's permissions, which forks a shell per file (~3 ms each)
+    def leaves(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    val readerConfs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    (leaves(fs.getFileStatus(p)).sorted, readerConfs)
+  }
+
+  /** The parquet schema Spark infers for `path` under the session's
+    * current confs, inferred only when the signature changed.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val sig = signature(spark, path)
+    val hit = inferred.get(path)
+    if (hit != null && hit.signature == sig) hit.schema
+    else {
+      val schema = spark.read.parquet(path).schema
+      inferred.put(path, Inferred(sig, schema))
+      schema
+    }
+  }
+
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -39,10 +84,9 @@ object Tables {
       // session-zoned type (a value no-op under the UTC session zone both
       // mains set) so every downstream window/unix_ts op sees one type.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      normalizeEventTs(raw)
+      normalizeEventTs(read(spark, s"$dir/$name.parquet"))
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      read(spark, s"$dir/$name.parquet")
     }
 
   /** Bring `ts` to session-zoned TimestampType regardless of how the
@@ -65,7 +109,7 @@ object Tables {
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val rawSchema = schemaOf(spark, s"$dir/events.parquet")
     // FileStreamSource insists on a directory path (it manages its own
     // basePath); the harness table is a single file. Stage a symlink to
     // it in a per-sfDir temp directory and stream that directory.

@@ -1,41 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructType}
 
 /** Z-order vs linear layout scoring (the OPTIMIZE ZORDER decision:
   * which key layout gives min/max file skipping the smallest per-slab
-  * bounding boxes), with a SCALE-DISPATCHED entry point — the q318/q344
-  * pair behind one door, the `autoTopK` pattern (round-10 verdict
-  * item 7).
+  * bounding boxes). Both layouts bin the rows into 64 slabs by 63
+  * boundaries over their key (Morton z, or the linear k = a·1024 + b)
+  * and score Σ slab bounding-box area.
   *
-  *  - [[scoreExact]] — the ORACLE-TRUTH form (declared as q318): ONE
-  *    bounded (a, b, z, k) histogram pass (≤2²⁰ rows by the mod-1024
-  *    key construction, constant in data size) feeds a driver-side
-  *    bit-identical replay of Spark's Percentile interpolation AND both
-  *    slab folds — the full keyed stream is read exactly once, and
-  *    nothing data-sized reaches one task at any scale.
-  *  - [[scoreSketch]] — boundaries from ONE mergeable
-  *    `approx_percentile` agg (t-digest, single pass, no value
-  *    collection, no intermediate histogram): the general-keying scale
-  *    pattern — what the scorer would run if the keys were NOT
-  *    domain-capped — with the slab-population contract computed
-  *    alongside (declared as q344).
-  *  - [[score]] — dispatches by row count: exact at or below
-  *    `spark.graft.layout.exactLimit` (default 10M), sketch above.
-  *    With the mod-1024 keying both branches now survive 100 TB (the
-  *    exact form is histogram-bounded); the dispatch is kept because
-  *    past the limit the single-pass sketch skips the histogram
-  *    shuffle + bounded collect entirely, and because it is the
-  *    pattern a NON-capped keying needs. A user reaching for "score my
-  *    layout" gets a surviving plan without reading any scaladoc.
+  *  - [[scoreExact]] (q318, the oracle truth): exact percentile
+  *    boundaries.
+  *  - [[scoreSketch]] (q344): boundaries from one mergeable
+  *    `approx_percentile` pass over the keyed stream, plus the
+  *    slab-population contract.
+  *  - [[score]]: exact at or below `spark.graft.layout.exactLimit` rows
+  *    (default 10M), sketch above.
   *
-  * Slab assignment is always the EquiDepthBins literal binary-search
-  * CASE tree (6 codegen'd compares per row).
-  *
-  * Reference: the layout decision a 100 TB deployment replays before
-  * `repartitionByRange` writes; q318's scaladoc carries the full
-  * provenance.
+  * Invariants shared by every entry: the (a, b, z, k) histogram is
+  * bounded at 2²⁰ rows by the mod-1024 key construction whatever the
+  * data size; it is collected once (one `groupBy` count) and both
+  * layouts' boundaries, slab assignment and areas are folded on the
+  * driver from it. A cell's slab is #{j : b_j < key}, the key promoted
+  * to double — the `EquiDepthBins.searchCountExpr(strict = true)`
+  * semantics, which ZOrderLayoutSpec pins the fold against. The result
+  * is a 2-row local frame.
   */
 object ZOrderLayout {
   /** Morton interleave of two 10-bit ints as a pure integer expression
@@ -55,52 +45,82 @@ object ZOrderLayout {
     * (a=1,b=-1 collides with a=0,b=1023) — pmod pins a,b ∈ [0,1024) for
     * ANY integer key expression, keeping (a,b) ↔ z ↔ k bijective.
     *
-    * NOT checkpointed (round 14, guide §2.4): [[scoreExact]] reads the
-    * keyed stream exactly ONCE (straight into the bounded-histogram
-    * agg), so the old eager localCheckpoint here was a full extra
-    * materialization pass — a data-sized cache write + read bought
-    * nothing. The entries that DO re-read the stream ([[scoreSketch]]'s
-    * boundary agg + histogram, [[score]]'s dispatch count) checkpoint
-    * internally.
+    * Not checkpointed: [[scoreExact]] reads the keyed stream once,
+    * straight into the histogram aggregate; the entries that read it
+    * twice ([[scoreSketch]], [[score]]) checkpoint it themselves.
     */
   def keyed(df: DataFrame, aExpr: String, bExpr: String): DataFrame =
     df.select(expr(s"pmod($aExpr, 1024)").as("a"), expr(s"pmod($bExpr, 1024)").as("b"))
       .withColumn("z", expr(morton10("a", "b")))
       .withColumn("k", col("a") * 1024 + col("b"))
 
-  /** The shared bounded histogram: one `groupBy(a, b, z, k)` count —
-    * ≤2²⁰ rows by the mod-1024 key construction, CONSTANT in data
-    * size — checkpointed because every downstream pass (boundary
-    * collect, slab folds for BOTH layouts) reads it.
+  /** The (a, b, z, k) cell counts on the driver, column-major: one
+    * `groupBy` count, ≤ 2²⁰ rows by the mod-1024 key construction.
     */
-  private def boundedHist(keyed: DataFrame): DataFrame =
-    keyed.groupBy("a", "b", "z", "k")
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+  private final class Hist(
+      val a: Array[Long], val b: Array[Long],
+      val z: Array[Long], val k: Array[Long], val c: Array[Long])
 
-  /** Per-slab bounding-box area + population over the bounded histogram
-    * (pop = Σ __c recovers the raw row count per slab exactly) — the
-    * fold costs ≤2²⁰ rows however large the data was.
-    */
-  private def histAreaFold(hist: DataFrame, caseExpr: String): DataFrame =
-    hist
-      .select(col("a"), col("b"), expr(caseExpr).as("slab"), col("__c"))
-      .groupBy("slab")
-      .agg(((max("a") - min("a") + 1) * (max("b") - min("b") + 1)).as("area"),
-        sum("__c").as("pop"))
-
-  private def withVerdict(zRaw: DataFrame, linRaw: DataFrame): DataFrame = {
-    // pin each layout's one-row area summary: the union row and the
-    // verdict probe would otherwise each re-run the slab-keyed pass
-    // over the full keyed frame (4 data passes instead of 2)
-    val z = zRaw.localCheckpoint()
-    val lin = linRaw.localCheckpoint()
-    z.unionByName(lin)
-      .crossJoin(broadcast(
-        z.select(col("sum_area").as("za"))
-          .crossJoin(lin.select(col("sum_area").as("la")))
-          .select((col("za") < col("la")).as("zorder_wins"))))
+  private def histogram(keyed: DataFrame, caller: String): Hist = {
+    val rows = keyed.groupBy("a", "b", "z", "k").agg(count(lit(1))).collect()
+    require(rows.nonEmpty, s"ZOrderLayout.$caller: empty keyed frame — nothing to score")
+    def long(i: Int): Array[Long] = rows.map(_.getAs[Number](i).longValue())
+    new Hist(long(0), long(1), long(2), long(3), long(4))
   }
+
+  /** Slab of `key` among `bs`: the balanced binary search of
+    * `EquiDepthBins.searchCountExpr(strict = true)`, step for step, so
+    * #{j : b_j < key} for sorted boundaries.
+    */
+  private[graft] def slabOf(key: Double, bs: Array[Double]): Int = {
+    var lo = 0
+    var hi = bs.length
+    while (lo < hi) {
+      val mid = (lo + hi) / 2
+      if (key <= bs(mid)) hi = mid else lo = mid + 1
+    }
+    lo
+  }
+
+  /** One layout over the histogram → (Σ bounding-box area over the
+    * non-empty slabs, each slab's row count). Area per slab is
+    * (max a − min a + 1)·(max b − min b + 1); Σ c recovers the raw
+    * per-slab row count exactly.
+    */
+  private def slabFold(h: Hist, key: Array[Long], bs: Array[Double]): (Long, Array[Long]) = {
+    val m = bs.length + 1
+    val minA = Array.fill(m)(Long.MaxValue)
+    val maxA = Array.fill(m)(Long.MinValue)
+    val minB = Array.fill(m)(Long.MaxValue)
+    val maxB = Array.fill(m)(Long.MinValue)
+    val pop = new Array[Long](m)
+    var i = 0
+    while (i < key.length) {
+      val s = slabOf(key(i).toDouble, bs)
+      minA(s) = math.min(minA(s), h.a(i)); maxA(s) = math.max(maxA(s), h.a(i))
+      minB(s) = math.min(minB(s), h.b(i)); maxB(s) = math.max(maxB(s), h.b(i))
+      pop(s) += h.c(i)
+      i += 1
+    }
+    val area = (0 until m).iterator.filter(pop(_) > 0)
+      .map(s => (maxA(s) - minA(s) + 1) * (maxB(s) - minB(s) + 1)).sum
+    (area, pop)
+  }
+
+  private val exactSchema = new StructType()
+    .add("layout", StringType, nullable = false)
+    .add("sum_area", LongType)
+    .add("zorder_wins", BooleanType)
+
+  private val sketchSchema = new StructType()
+    .add("layout", StringType, nullable = false)
+    .add("n_rows", LongType, nullable = false)
+    .add("slabs_ok", BooleanType)
+    .add("sum_area", LongType)
+    .add("zorder_wins", BooleanType)
+
+  private def localFrame(keyed: DataFrame, schema: StructType, rows: Row*): DataFrame =
+    keyed.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Exact interpolated percentiles from a (value, frequency) histogram —
     * a bit-identical driver-side replay of Spark's `Percentile` aggregate
@@ -152,89 +172,55 @@ object ZOrderLayout {
 
   private val ps63: Array[Double] = (1 to 63).map(i => i / 64.0).toArray
 
-  /** Exact-boundary scoring → (layout, sum_area, zorder_wins), unsorted.
-    *
-    * The whole computation rides ONE bounded histogram: z and k are both
-    * bijections of (a, b), so a single `groupBy(a, b, z, k)` count —
-    * AT MOST 2²⁰ rows by the mod-1024 key construction, CONSTANT in data
-    * size — carries both layouts' exact order statistics AND both slab
-    * folds. The full keyed stream is read exactly once (one
-    * map-side-combinable agg); boundaries come from a driver-side
-    * bit-identical replay of Spark's Percentile interpolation over the
-    * collected histogram (bounded ≤2²⁰ · 24 B ≈ 16 MB, the
-    * bounds-table collect discipline), and the two 63-way CASE slab
-    * folds then run over the ≤2²⁰-row histogram instead of the data —
-    * at 100 TB that is the difference between scoring a layout in one
-    * linear pass and re-reading 10¹² rows twice. Replaced the previous
-    * in-engine `percentile` pass, whose final merge funneled every
-    * partition's value map through one reducer (measured 6–16 s at
-    * sf0.1 vs ~2 s for this form; boundaries and areas bit-identical).
+  /** Exact-boundary scoring → (layout, sum_area, zorder_wins), zorder
+    * row first. Boundaries are a bit-identical driver replay of Spark's
+    * `percentile` + `round(x, 6)` over the collected histogram
+    * ([[histPercentiles]]); the keyed stream is read once, by the
+    * histogram aggregate.
     */
   def scoreExact(keyed: DataFrame): DataFrame = {
-    val hist = boundedHist(keyed)
-    // bounded collect: ≤ 2^20 rows by the mod-1024 key domain
-    val rows = hist.select("z", "k", "__c").collect()
-    require(rows.nonEmpty,
-      "ZOrderLayout.scoreExact: empty keyed frame — nothing to score")
-    val zbs = histPercentiles(
-      rows.map(r => (r.getAs[Number](0).longValue(), r.getLong(2))), ps63)
-    val kbs = histPercentiles(
-      rows.map(r => (r.getAs[Number](1).longValue(), r.getLong(2))), ps63)
-    def layoutArea(keyCol: String, bs: Seq[Double], name: String): DataFrame = {
-      val caseExpr = EquiDepthBins.searchCountExpr(
-        keyCol, bs.map(b => s"${b}D"), strict = true)
-      histAreaFold(hist, caseExpr)
-        .agg(sum("area").as("sum_area"))
-        .select(lit(name).as("layout"), col("sum_area"))
-    }
-    withVerdict(
-      layoutArea("z", zbs.toIndexedSeq, "zorder"),
-      layoutArea("k", kbs.toIndexedSeq, "linear"))
+    val h = histogram(keyed, "scoreExact")
+    def area(key: Array[Long]): Long =
+      slabFold(h, key, histPercentiles(key.zip(h.c), ps63))._1
+    val (za, la) = (area(h.z), area(h.k))
+    localFrame(keyed, exactSchema,
+      Row("zorder", za, za < la), Row("linear", la, za < la))
   }
 
   /** Sketch-boundary scoring → (layout, n_rows, slabs_ok, sum_area,
-    * zorder_wins), unsorted. ONE mergeable approx_percentile agg fits
-    * both layouts' boundaries (integer input ⇒ actual data values as
-    * longs); each layout pays one slab-keyed pass computing bounding
-    * boxes AND the slab-population contract together (population within
-    * n/64 ± (n/500 + 8) for ALL 64 slabs — the count(*)=64 conjunct
-    * catches empty slabs from degenerate duplicate boundaries).
+    * zorder_wins), zorder row first. One mergeable approx_percentile
+    * agg over the keyed stream fits both layouts' boundaries (integer
+    * input ⇒ actual data values); the slab folds and the
+    * slab-population contract run on the collected histogram. The
+    * contract: all 64 slabs non-empty, each holding n/64 ± (n/500 + 8)
+    * rows — the count catches empty slabs from degenerate duplicate
+    * boundaries.
     */
   def scoreSketch(keyed: DataFrame): DataFrame = sketchOn(keyed.localCheckpoint())
 
   /** [[scoreSketch]] body over an already-pinned keyed frame — split out
     * so [[score]]'s dispatch can reuse ITS checkpoint without paying a
-    * second materialization.
+    * second materialization. Reads the keyed frame twice: the boundary
+    * agg and the histogram.
     */
   private def sketchOn(keyed: DataFrame): DataFrame = {
-    // the boundary agg stays on the RAW stream — the mergeable-t-digest
-    // single pass is the point of the sketch form; the slab folds ride
-    // the bounded histogram (pop = Σ __c is exactly the raw per-slab
-    // count), so the data is read twice total instead of three times
-    // and the folds stay ≤2²⁰ rows at any scale. The keyed input is
-    // checkpointed by the public entries (this body reads it twice).
     val row = keyed.agg(
       expr(s"approx_percentile(z, array($qs63), 10000)").as("zb"),
       expr(s"approx_percentile(k, array($qs63), 10000)").as("kb"),
       count(lit(1)).as("n")).head()
     val n = row.getLong(2)
+    require(n > 0, "ZOrderLayout.scoreSketch: empty keyed frame — nothing to score")
     val slack = n / 500 + 8
-    val hist = boundedHist(keyed)
-    def layout(keyCol: String, bs: Seq[Long], name: String): DataFrame = {
-      val caseExpr = EquiDepthBins.searchCountExpr(
-        keyCol, bs.map(b => s"${b}L"), strict = true)
-      histAreaFold(hist, caseExpr)
-        .agg(sum("area").as("sum_area"),
-          (min(col("pop") >= lit(n / 64 - slack) &&
-            col("pop") <= lit(n / 64 + slack)) &&
-            count(lit(1)) === 64).as("slabs_ok"))
-        .select(lit(name).as("layout"), lit(n).as("n_rows"),
-          col("slabs_ok"), col("sum_area"))
+    val h = histogram(keyed, "scoreSketch")
+    def fold(key: Array[Long], i: Int): (Long, Boolean) = {
+      val (area, pop) = slabFold(h, key, row.getSeq[Number](i).map(_.doubleValue()).toArray)
+      val live = pop.filter(_ > 0)
+      (area, live.length == 64 &&
+        live.forall(p => p >= n / 64 - slack && p <= n / 64 + slack))
     }
-    withVerdict(
-      layout("z", row.getSeq[Long](0), "zorder"),
-      layout("k", row.getSeq[Long](1), "linear"))
-      .select("layout", "n_rows", "slabs_ok", "sum_area", "zorder_wins")
+    val ((za, zOk), (la, lOk)) = (fold(h.z, 0), fold(h.k, 1))
+    localFrame(keyed, sketchSchema,
+      Row("zorder", n, zOk, za, za < la), Row("linear", n, lOk, la, za < la))
   }
 
   /** Scale-dispatched scoring → (layout, sum_area, zorder_wins, mode)
@@ -248,7 +234,7 @@ object ZOrderLayout {
       else keyed.sparkSession.conf
         .get("spark.graft.layout.exactLimit", "10000000").toLong
     // the dispatch count plus either branch reads the stream at least
-    // twice — pin it once here ([[keyed]] no longer checkpoints)
+    // twice — pin it once here
     val kc = keyed.localCheckpoint()
     val out =
       if (kc.count() <= limit) scoreExact(kc).withColumn("mode", lit("exact"))

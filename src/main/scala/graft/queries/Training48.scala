@@ -102,29 +102,23 @@ object Training48 {
     // ways — by Morton z-value and by the linear key a·1024+b — and
     // each layout is scored by Σ slab bounding-box area (what min/max
     // file skipping sees: smaller boxes ⇒ more prunable files). The
-    // interleave is a plan-time-expanded integer expression (no UDF);
-    // slab assignment uses the EquiDepthBins discipline — 63
-    // percentile boundaries, collected (bounded) and embedded as a
-    // codegen'd literal CASE chain, NO global window (at deployment
-    // the same boundaries drive the write-side repartitionByRange).
-    // THIS exact-percentile form is the ORACLE TRUTH; the declared
-    // plan that survives 100 TB is its sketch-boundary twin
-    // q344_zorder_layout_sketch (one mergeable approx_percentile agg
-    // fits BOTH layouts' boundaries, slab-population contract gate) —
-    // reach for q344 at scale. zorder_wins reports whether the z layout's
-    // total box area beats linear — TRUE whenever the key grid is
-    // dense (sf0.01+ here; at 100 TB always); on a very sparse grid
-    // (sf0.001) linear's thin-slab shape can win, which the computed
-    // verdict records honestly.
+    // interleave is a plan-time-expanded integer expression (no UDF).
+    // The (a, b, z, k) histogram is bounded at 2²⁰ rows by the mod-1024
+    // keying, collected once, and folded on the driver: 63 exact
+    // percentile boundaries per layout, slab = #{boundaries < key}, no
+    // global window (at deployment the same boundaries drive the
+    // write-side repartitionByRange). THIS exact-percentile form is the
+    // ORACLE TRUTH; q344_zorder_layout_sketch is its sketch-boundary
+    // twin (one mergeable approx_percentile agg fits both layouts'
+    // boundaries, slab-population contract gate), and
+    // ZOrderLayout.score routes there past spark.graft.layout.exactLimit.
+    // zorder_wins reports whether the z layout's total box area beats
+    // linear — TRUE whenever the key grid is dense (sf0.01+ here); on a
+    // very sparse grid (sf0.001) linear's thin-slab shape can win, which
+    // the computed verdict records honestly.
     QueryDef(
       "q318_zorder_layout",
       (s, d) => {
-        // exact-boundary scoring lives in operators/ZOrderLayout (ONE
-        // percentile pass for both layouts' 63-point grids, literal
-        // binary-search CASE slab assignment — the interpreted lambda
-        // fold measured 40x slower here); the scale-dispatched entry
-        // point ZOrderLayout.score routes to q344's sketch twin past
-        // spark.graft.layout.exactLimit
         import graft.operators.ZOrderLayout
         ZOrderLayout.scoreExact(ZOrderLayout.keyed(
           t(s, d, "lineitem"), "l_partkey", "l_suppkey")).orderBy("layout")

@@ -109,9 +109,9 @@ object Training60 {
     // with SKETCH slab boundaries. The exact q318 stays oracle truth;
     // THIS is the plan that survives 100 TB: boundaries for BOTH
     // layouts come from ONE mergeable approx_percentile aggregation
-    // (no global per-key value collection), then each layout pays one
-    // slab-keyed pass computing bounding boxes AND slab populations
-    // together. Gates (the q294 sketch-contract discipline — sketch
+    // (no global per-key value collection); bounding boxes AND slab
+    // populations are folded on the driver from the same ≤ 2²⁰-row
+    // (a, b, z, k) histogram q318 collects. Gates (the q294 sketch-contract discipline — sketch
     // outputs are merge-order-dependent, so the oracle pins exact
     // counts + contracts, not sketch values):
     //   slabs_ok — every slab's population is n/64 ± (n/500 + 8)
@@ -125,8 +125,8 @@ object Training60 {
       (s, d) => {
         // sketch-boundary scoring lives in operators/ZOrderLayout (ONE
         // mergeable approx_percentile agg fits both layouts' grids; the
-        // slab-population contract rides the same fold, all 64 slab ids
-        // checked); ZOrderLayout.score dispatches here past
+        // slab-population contract rides the driver fold, all 64 slab
+        // ids checked); ZOrderLayout.score dispatches here past
         // spark.graft.layout.exactLimit
         import graft.operators.ZOrderLayout
         ZOrderLayout.scoreSketch(ZOrderLayout.keyed(

@@ -1,15 +1,95 @@
 package graft
 
-import graft.operators.ZOrderLayout
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
 
-/** The scale-dispatched layout scorer (round-10 verdict item 7): both
-  * branches forced via the exactLimit knob, the dispatch verdicts must
-  * agree, and the sketch slab contract must hold on harness data.
+import graft.operators.{EquiDepthBins, ZOrderLayout}
+
+/** The layout scorer: the driver slab fold equals the Catalyst CASE-tree
+  * fold it replaced, both dispatch branches give the same verdict, and
+  * the sketch slab contract holds on harness data.
   */
 class ZOrderLayoutSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def keyedFrame =
     ZOrderLayout.keyed(Tables(spark, dir, "lineitem"), "l_partkey", "l_suppkey")
+
+  /** Skewed keys: a third of the rows share one (a, b) cell and a fifth
+    * of the rest another, so several percentile boundaries land exactly
+    * on a key value.
+    */
+  private def skewedKeyed: DataFrame = ZOrderLayout.keyed(
+    spark.range(0, 6000).selectExpr(
+      "CASE WHEN id % 3 = 0 THEN 5 ELSE (id * id) % 1500 END AS p",
+      "CASE WHEN id % 5 = 0 THEN 9 ELSE (id * 7) % 300 - 40 END AS q"),
+    "p", "q")
+
+  private val ps63 = (1 to 63).map(_ / 64.0).toArray
+
+  /** The in-engine scorer: exact boundaries from the collected
+    * histogram, then each layout's slabs assigned by the
+    * `searchCountExpr(strict = true)` CASE tree and folded by Catalyst.
+    * Returns the rows and the z layout's boundaries.
+    */
+  private def catalystScoreExact(keyed: DataFrame): (Seq[Row], Seq[Double]) = {
+    val hist = keyed.groupBy("a", "b", "z", "k").agg(count(lit(1)).as("__c")).cache()
+    try {
+      val cells = hist.select("z", "k", "__c").collect()
+      def bounds(i: Int) = ZOrderLayout.histPercentiles(
+        cells.map(r => (r.getAs[Number](i).longValue(), r.getLong(2))), ps63)
+      def area(keyCol: String, bs: Array[Double]): Long = hist
+        .select(col("a"), col("b"),
+          expr(EquiDepthBins.searchCountExpr(keyCol, bs.map(b => s"${b}D").toSeq, strict = true))
+            .as("slab"))
+        .groupBy("slab")
+        .agg(((max("a") - min("a") + 1) * (max("b") - min("b") + 1)).as("area"))
+        .agg(sum("area")).head().getLong(0)
+      val (zbs, kbs) = (bounds(0), bounds(1))
+      val (za, la) = (area("z", zbs), area("k", kbs))
+      (Seq(Row("zorder", za, za < la), Row("linear", la, za < la)), zbs.toSeq)
+    } finally hist.unpersist()
+  }
+
+  test("slabOf is the searchCountExpr(strict = true) CASE tree, ties included") {
+    import spark.implicits._
+    val bs = Array(3.0, 3.0, 7.0, 7.0, 7.0, 12.5, 40.0)
+    val keys = (-1L to 45L).toSeq
+    val live = keys.toDF("x")
+      .select(col("x"),
+        expr(EquiDepthBins.searchCountExpr("x", bs.map(b => s"${b}D").toSeq, strict = true)))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    keys.foreach(x => assert(ZOrderLayout.slabOf(x.toDouble, bs) === live(x), s"key $x"))
+    assert(ZOrderLayout.slabOf(7.0, bs) === 2)
+  }
+
+  test("scoreExact's driver fold equals the Catalyst CASE-tree fold on skewed keys") {
+    val skewed = skewedKeyed
+    val zs = skewed.select("z").distinct().collect().map(_.getAs[Number](0).doubleValue()).toSet
+    Seq(skewed, keyedFrame).foreach { k =>
+      val (want, zbs) = catalystScoreExact(k)
+      val got = ZOrderLayout.scoreExact(k)
+      assert(got.schema.map(f => f.name -> f.dataType) ===
+        Seq("layout" -> StringType, "sum_area" -> LongType, "zorder_wins" -> BooleanType))
+      assert(got.collect().toSeq === want)
+      if (k eq skewed) assert(zbs.exists(zs.contains), "no z key equals a boundary")
+    }
+  }
+
+  test("building scoreExact launches at most two jobs") {
+    val k = keyedFrame
+    val (out, jobs) = JobCounter(spark.sparkContext)(ZOrderLayout.scoreExact(k))
+    assert(jobs <= 2, s"$jobs jobs")
+    assert(out.count() === 2)
+  }
+
+  test("the sketch contract fails on skewed keys: one cell outweighs a slab") {
+    val rows = ZOrderLayout.scoreSketch(skewedKeyed).collect()
+    assert(rows.length === 2)
+    assert(rows.forall(r => !r.getAs[Boolean]("slabs_ok")), rows.mkString(";"))
+    assert(rows.forall(_.getAs[Long]("n_rows") == 6000L))
+  }
 
   test("score: exact branch at-or-below the limit, sketch above; same verdict") {
     val k = keyedFrame
